@@ -1361,14 +1361,8 @@ def graph_pagerank(spark, sf_dir):
     under the relabeling, so the oracle hash is unchanged."""
     from .operators import graph
 
-    # symmetrize guarantees every node an in-edge, so the per-round nodes
-    # left-join is skipped (all_nodes_receive); broadcast_ranks because
-    # nodes here are bounded by the customer+supplier DIMENSIONS while
-    # edges scale with the fact table — the node frame fits the broadcast
-    # cap at any sf, buying zero-shuffle rounds (r6, measured 1.6×)
     ranks = graph.pagerank(graph.symmetrize(_cs_pairs_int(spark, sf_dir)),
-                           n_iters=5, all_nodes_receive=True,
-                           broadcast_ranks=True)
+                           n_iters=5)
     return ranks.select(_cs_node_str(F.col("node")).alias("node"), "rank_e12")
 
 
@@ -1387,8 +1381,7 @@ def graph_ppr(spark, sf_dir):
         F.col("c_nationkey") == 0
     ).select((F.col("c_custkey") * 2).alias("node"))
     ranks = graph.personalized_pagerank(
-        graph.symmetrize(_cs_pairs_int(spark, sf_dir)), seeds, n_iters=5,
-        broadcast_ranks=True)
+        graph.symmetrize(_cs_pairs_int(spark, sf_dir)), seeds, n_iters=5)
     return ranks.select(_cs_node_str(F.col("node")).alias("node"), "rank_e12")
 
 
@@ -1677,15 +1670,12 @@ def graph_lpa(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     # node ids stay STRINGS here: LPA's smallest-label tie-break orders
     # label VALUES, so the BIGINT relabeling of graph_pagerank would
-    # change results. broadcast_labels is safe (placement, not values)
-    # and valid for the same dimension-bounded-nodes reason (r6).
+    # change results.
     pairs = o.join(li, o.o_orderkey == li.l_orderkey).select(
         F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
         F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
     )
-    return graph.label_propagation(graph.symmetrize(pairs), n_iters=3,
-                                    all_nodes_receive=True,
-                                    broadcast_labels=True)
+    return graph.label_propagation(graph.symmetrize(pairs), n_iters=3)
 
 
 def graph_bfs(spark, sf_dir):
@@ -1697,12 +1687,10 @@ def graph_bfs(spark, sf_dir):
     contract)."""
     from .operators import graph
 
-    # r6: BIGINT ids in-flight (hop counts are relabeling-invariant),
-    # zero-shuffle rounds (broadcast_frontier — reached set is bounded by
-    # the customer+supplier dimensions); "c1" encodes to node 2
+    # r6: BIGINT ids in-flight (hop counts are relabeling-invariant);
+    # "c1" encodes to node 2
     dist = graph.bfs_distances(
-        graph.symmetrize(_cs_pairs_int(spark, sf_dir)), [2], max_depth=4,
-        broadcast_frontier=True)
+        graph.symmetrize(_cs_pairs_int(spark, sf_dir)), [2], max_depth=4)
     return dist.select(_cs_node_str(F.col("node")).alias("node"), "dist")
 
 
@@ -1735,8 +1723,8 @@ def graph_sssp(spark, sf_dir):
     graph, edge weight = min line quantity between the pair."""
     from .operators import graph
 
-    # r6: BIGINT ids + zero-shuffle rounds, as in graph_bfs (distances
-    # depend on weights and reachability only, not on id spelling)
+    # r6: BIGINT ids, as in graph_bfs (distances depend on weights and
+    # reachability only, not on id spelling)
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_quantity"
@@ -1751,8 +1739,7 @@ def graph_sssp(spark, sf_dir):
             F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
         )
     )
-    dist = graph.sssp_distances(both, [2], n_rounds=4,
-                                broadcast_frontier=True)
+    dist = graph.sssp_distances(both, [2], n_rounds=4)
     return dist.select(_cs_node_str(F.col("node")).alias("node"), "dist")
 
 

@@ -1,6 +1,6 @@
-"""Graph algorithms over KG edge tables: fixed-point PageRank,
-synchronous label-propagation community detection, and BFS landmark
-distances.
+"""Graph algorithms over KG edge tables: fixed-point (personalized)
+PageRank, synchronous label-propagation community detection, BFS/SSSP
+landmark distances, triangle counts and k-cores.
 
 The reference materializes a KG and walks its ontology edges (the closure
 in `utils.py:489-569` that operators/ontology.py re-expresses); what it
@@ -28,72 +28,146 @@ convergence test — iterations are fixed so the unrolled oracle matches.
 Catalog callers symmetrize their edge tables, which removes dangling nodes
 entirely.
 
-Scale notes (100 TB): the edge table joins RANKS (node-sized, the small
-side as soon as edges >> nodes) once per iteration — shuffle on src — and
-the contribution sum is a partial-agg groupBy on dst. The out-degree join
-is precomputed once and the iteration count is a constant, so total cost
-is n_iters × (one co-partitioned join + one agg). No driver-side state:
-the node count enters the plan as a broadcast 1-row frame, the same
-pattern the catalog's stats entries use.
+Physical strategy — one size rule for every iterative loop (PageRank, PPR,
+LPA, BFS, SSSP). Each call persists its deduped edge cache and
+checkpoints a node frame ``(node, has_in)`` derived from it. That job
+materializes the cache and, through an Observation on the same job,
+brings ONE row of node stats to the driver: the node count N and how many
+nodes have an in-edge. The row (plus PPR's seed count in the same row) is
+the module's only driver-side state.
+
+* Broadcast rounds when N × the per-row width of the node-sized side
+  (ranks, labels or distances) fits ``spark.sql.autoBroadcastJoinThreshold``.
+  The width is Spark's own row-size estimate from the side's schema (8
+  bytes of row overhead plus each column type's default size: 8 for
+  BIGINT, 20 for STRING), and the threshold is read through the session's
+  SQLConf, so ``-1`` means never and ``10m`` parses as Spark parses it.
+  The edge cache is clustered by hash(dst): each round's join takes the
+  node side by broadcast and the round's groupBy on dst rides the cache's
+  partitioning — no exchange inside a round.
+* Shuffle rounds otherwise. The edge cache is clustered by hash(src): each
+  round exchanges the node-sized side into the join and partial
+  aggregates for the groupBy on dst, with memory bounded however large N
+  grows (exchange cost is bytes and fan-out — Hyper Dimension Shuffle,
+  VLDB 2019 — so the rule is stated in bytes).
+* The per-round keep-join against the node frame, which keeps nodes that
+  receive nothing in a round, is skipped exactly when every node has an
+  in-edge (true for ``symmetrize``d tables): the round's groupBy on dst
+  then already emits a row per node. (PPR with explicit seeds keeps it,
+  because the node frame carries the seed flag; BFS/SSSP need none,
+  their self-loops keep every reached node.)
+
+Both shapes compute bit-identical values (same arithmetic, different
+placement); the tests run every fixture on both sides of the rule.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 SCALE = 10**12  # rank unit = 1e-12 of total mass
 DAMP_NUM, DAMP_DEN = 85, 100  # d = 0.85 as an exact rational
 
 
-def _weighted_edges(edges: DataFrame, cluster: str = "src") -> DataFrame:
-    """Iteration-invariant (src, dst, outdeg) table, deduped, CLUSTERED by
-    ``src`` and cached WITH its partitioning (r6).
+def _partitions(df: DataFrame) -> int:
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
-    The old shape (``edges.join(deg).localCheckpoint()``) forgot the join's
-    hash partitioning (checkpointed RDD scans report UnknownPartitioning),
-    so EVERY iteration's ``weighted ⋈ ranks`` re-exchanged and re-sorted
-    the edge-sized side. Here the out-degree is a window count over one
-    explicit hash(src) repartition — HashPartitioning(src) satisfies the
-    groupless window's ClusteredDistribution and the window sort leaves the
-    partitions sorted by src — and ``persist()`` keeps plan, partitioning
-    and ordering visible to EnsureRequirements: each round's sort-merge
-    join now exchanges and sorts ONLY the node-sized rank frame (guide
-    §2.4, operations keyed the same way share one exchange). The explicit
-    partition count pins the layout so AQE cannot coalesce the rank side
-    to a mismatched count.
 
-    ``cluster="dst"`` (r6, for the broadcast-rounds strategy) adds one
-    more exchange so the CACHED layout is hash(dst): the per-round
-    contribution ``groupBy("dst")`` then rides the cache's partitioning
-    and the round needs no exchange at all (the rank side arrives by
-    broadcast). The extra build exchange is paid once; the per-round
-    exchange it deletes would be paid ``n_iters`` times."""
+def _node_frame(cache: DataFrame) -> DataFrame:
+    """``(node, has_in)`` for every node of the persisted edge cache
+    ``cache(src, dst, ...)``; ``has_in`` is 1 when the node has an
+    in-edge.
+
+    Both endpoints come out of ONE map-side explode, so the cache is
+    scanned once: a union of a src and a dst projection would put it in
+    the plan twice, and AQE would materialize it twice, concurrently,
+    each job holding cores while it waits on the other's cache blocks."""
+    ends = F.explode(F.array(
+        F.struct(F.col("src").alias("node"), F.lit(0).alias("has_in")),
+        F.struct(F.col("dst").alias("node"), F.lit(1).alias("has_in")),
+    ))
+    return (
+        cache.select(ends.alias("e"))
+        .groupBy("e.node")
+        .agg(F.max("e.has_in").alias("has_in"))
+    )
+
+
+def _strategy(nodes: DataFrame, side: DataFrame, *more: Column) -> tuple:
+    """The size rule (module docstring), decided once per call.
+
+    Checkpoints the node frame ``nodes(node, has_in, ...)`` (eager) and
+    observes one row on that same job: the node count, the number of
+    nodes with an in-edge, and the caller's named ``more`` aggregates.
+    Returns ``(nodes, broadcast, all_receive, *more)`` with the
+    checkpointed frame: ``broadcast`` when node count × the per-row width
+    of ``side`` (the node-sized frame each round joins; only its schema is
+    read) fits the session's ``spark.sql.autoBroadcastJoinThreshold``,
+    ``all_receive`` when every node has an in-edge."""
+    stats = Observation()
+    nodes = nodes.observe(
+        stats, F.count(F.lit(1)).alias("n"), F.sum("has_in").alias("n_in"), *more
+    ).localCheckpoint()
+    n, n_in, *rest = stats.get.values()
+    conf = side.sparkSession._jsparkSession.sessionState().conf()
+    width = 8 + side._jdf.schema().defaultSize()
+    return (nodes, n * width <= conf.autoBroadcastJoinThreshold(), n_in == n,
+            *rest)
+
+
+def _edge_cache(edges: DataFrame, outdeg: bool = False) -> DataFrame:
+    """Iteration-invariant ``(src, dst[, outdeg])`` table, deduped and
+    persisted CLUSTERED by ``dst`` — the broadcast-rounds layout, which
+    the size rule picks for the catalog's graphs at test and benchmark
+    sizes. :func:`_rounds_shape` re-clusters it by src for shuffle
+    rounds, one more exchange of the edge table paid only on that path.
+
+    The out-degree is a window count over one explicit hash(src)
+    repartition, which also satisfies the (src, dst) dedup's clustering
+    (map-side pre-dedup buys nothing — 11.97M of 12M rows survive
+    distinct on the sf1.0 co-transaction graph); one more exchange, paid
+    once, then gives the cached hash(dst) layout, which each round's
+    groupBy on dst rides instead of exchanging partial aggregates
+    ``n_iters`` times. ``persist()`` keeps plan and partitioning visible
+    to EnsureRequirements, which a checkpointed RDD scan
+    (UnknownPartitioning) forgets; the explicit partition count pins the
+    layout so AQE cannot coalesce the node side to a mismatched count."""
     from pyspark.sql import Window
 
-    edges = edges.select("src", "dst")
-    n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    out = (
-        # ONE exchange: hash(src) satisfies the (src, dst) dedup's
-        # clustering requirement AND the window's, so dedup + out-degree
-        # ride the same shuffle (the old distinct-then-join paid separate
-        # exchanges for distinct, groupBy and join; map-side pre-dedup
-        # bought nothing — measured 11.97M of 12M rows survive distinct
-        # on the sf1.0 co-transaction graph)
-        edges.repartition(n, F.col("src"))
-        .dropDuplicates(["src", "dst"])
-        .withColumn(
-            "outdeg", F.count(F.lit(1)).over(Window.partitionBy("src"))
-        )
+    n = _partitions(edges)
+    out = edges.select("src", "dst")
+    if not outdeg:
+        return out.repartition(n, F.col("dst")).dropDuplicates().persist()
+    return (
+        out.repartition(n, F.col("src"))
+        .dropDuplicates()
+        .withColumn("outdeg", F.count(F.lit(1)).over(Window.partitionBy("src")))
+        .repartition(n, F.col("dst"))
+        .persist()
     )
-    if cluster == "dst":
-        out = out.repartition(n, F.col("dst"))
-    return out.persist()
 
 
-def pagerank(edges: DataFrame, n_iters: int = 5,
-             all_nodes_receive: bool = False,
-             broadcast_ranks: bool = False) -> DataFrame:
+def _rounds_shape(cache: DataFrame, broadcast: bool):
+    """-> ``(edges, hint)`` for the rounds, given a materialized
+    hash(dst)-clustered ``cache``. Broadcast: the cache as is and a
+    broadcast hint for the node side — no exchange inside a round.
+    Shuffle: the cache re-clustered by hash(src) and sorted by src within
+    partitions, persisted and materialized before the rounds (each round
+    would otherwise race to build it), and no hint: each round's
+    sort-merge join then exchanges and sorts only the node side."""
+    if broadcast:
+        return cache, F.broadcast
+    by_src = (
+        cache.repartition(_partitions(cache), F.col("src"))
+        .sortWithinPartitions("src")
+        .persist()
+    )
+    by_src.count()
+    return by_src, lambda df: df
+
+
+def pagerank(edges: DataFrame, n_iters: int = 5) -> DataFrame:
     """``edges(src, dst)`` -> ``(node, rank_e12)``; BIGINT fixed-point
     PageRank after ``n_iters`` synchronous iterations.
 
@@ -103,96 +177,99 @@ def pagerank(edges: DataFrame, n_iters: int = 5,
 
     Duplicate edges are collapsed (set semantics, like the closure's edge
     prep). Nodes = src ∪ dst; dangling nodes contribute nothing (mass
-    leak — see module docstring).
-
-    ``all_nodes_receive=True`` asserts every node has at least one
-    in-edge — true by construction for ``symmetrize``d edge tables — and
-    drops the per-round ``nodes`` left-join (the contribution groupBy
-    already emits a row per node), halving the shuffles per iteration:
-    join+agg only. Values are identical when the assertion holds; a node
-    with no in-edges would silently vanish from the result, so the flag
-    stays opt-in.
-
-    ``broadcast_ranks=True`` (r6) asserts the NODE table is small enough
-    to broadcast (well under the 8 GB / 512M-row broadcast-relation cap —
-    true whenever nodes are bounded by dimension tables while edges scale
-    with facts, e.g. the catalog's customer↔supplier co-transaction
-    graph) and switches the iteration to zero-shuffle rounds: the edge
-    cache is clustered by ``dst`` instead of ``src``, each round's
-    ``weighted ⋈ ranks`` is a broadcast hash join (no exchange, no sort
-    of either side) and the contribution ``groupBy("dst")`` rides the
-    cache's hash(dst) partitioning — the per-round exchange of partial
-    aggregates (bounded by nodes × partitions rows, the dominant
-    per-round cost measured at 12M edges) disappears entirely. Values
-    are bit-identical (same arithmetic, different physical plan); the
-    default stays the shuffle shape, whose memory footprint is
-    node-count-unbounded.
+    leak — see module docstring); nodes with no in-edge keep the teleport
+    term. This is :func:`personalized_pagerank` with every node as a
+    seed: with ``__s = 1`` and ``n_seeds = N`` its r_0 and teleport term
+    are exactly the ones above, so it runs the same loop and the same
+    size rule.
     """
-    # one materialization, reused by every iteration's join — clustered by
-    # src so the per-round join only shuffles the rank frame, or by dst so
-    # the broadcast-rounds strategy shuffles nothing (_weighted_edges)
-    weighted = _weighted_edges(
-        edges, cluster="dst" if broadcast_ranks else "src")
-    nodes = (
-        weighted.select(F.col("src").alias("node"))
-        .unionByName(weighted.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    # node count as a broadcast 1-row frame: parameterizes the plan
-    # without a driver collect
-    n1 = F.broadcast(nodes.agg(F.count("*").alias("n_nodes")))
-    base = f"({DAMP_DEN - DAMP_NUM}L * ({SCALE}L div n_nodes)) div {DAMP_DEN}L"
-    ranks = nodes.crossJoin(n1).select(
-        "node", F.expr(f"{SCALE}L div n_nodes").alias("rank_e12")
-    )
+    return personalized_pagerank(edges, None, n_iters)
+
+
+def personalized_pagerank(edges: DataFrame, seeds: DataFrame | None,
+                          n_iters: int = 5) -> DataFrame:
+    """``edges(src, dst)`` + ``seeds(node)`` -> ``(node, rank_e12)``;
+    BIGINT fixed-point PERSONALIZED PageRank (Page et al. 1999 §6 /
+    Jeh & Widom WWW'03 topic-sensitive variant): the teleport mass
+    returns only to the seed set, so ranks measure proximity TO THE SEEDS
+    through the graph — the entity-centric relevance score a KG serves
+    ("which entities matter around this incident type / this customer
+    cohort"), where global PageRank measures importance to everyone.
+
+        r_0(v)     = [v ∈ S] · (SCALE div |S|)
+        r_{t+1}(v) = [v ∈ S] · (15·(SCALE div |S|)) div 100
+                     + (85·Σ_{(u,v)∈E} r_t(u) div outdeg(u)) div 100
+
+    ``seeds=None`` seeds every node (:func:`pagerank`). Same exact-integer
+    discipline as PageRank (no float anywhere, ``div`` matches DuckDB
+    ``//`` on non-negative BIGINTs), so the unrolled-CTE oracle matches
+    bit-for-bit. Seeds outside the graph's node set are ignored; raises
+    ValueError if no seed is a node (0 seeds = undefined teleport). |S|
+    comes from the node-stats row, so the teleport unit enters the plan as
+    a literal.
+
+    Plan per round: one join of the edge cache with the rank frame + one
+    map-side-combinable sum on dst; broadcast or shuffle rounds by the
+    size rule (nodes × rank-row width against
+    ``autoBroadcastJoinThreshold``). The keep-join against the node frame
+    is skipped when every node has an in-edge and every node is a seed;
+    with explicit seeds it stays, since the node frame carries the seed
+    flag.
+    """
+    cache = _edge_cache(edges, outdeg=True)
+    nodes = _node_frame(cache)
+    if seeds is None:
+        nodes = nodes.withColumn("__s", F.lit(1))
+    else:
+        nodes = nodes.join(
+            seeds.select("node").distinct().withColumn("__s", F.lit(1)),
+            "node", "left",
+        ).withColumn("__s", F.coalesce("__s", F.lit(0)))
+    nodes, broadcast, all_receive, n_seeds = _strategy(
+        nodes, nodes.select("node", F.lit(0).cast("long").alias("rank_e12")),
+        F.sum("__s").alias("n_seeds"))
+    if n_seeds == 0:
+        cache.unpersist(blocking=True)
+        raise ValueError("personalized_pagerank: no seed is a graph node")
+    unit = SCALE // (n_seeds or 1)  # None only for an empty graph
+    base = ((DAMP_DEN - DAMP_NUM) * unit) // DAMP_DEN
+    step = F.expr(
+        f"__s * {base}L + ({DAMP_NUM}L * coalesce(in_mass, 0L)) div {DAMP_DEN}L"
+    ).alias("rank_e12")
+    weighted, hint = _rounds_shape(cache, broadcast)
+    ranks = nodes.select("node", F.expr(f"__s * {unit}L").alias("rank_e12"))
     for _i in range(n_iters):
-        rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
         in_mass = (
-            weighted.join(rank_side, weighted.src == ranks.node)
+            weighted.join(hint(ranks), weighted.src == ranks.node)
             .select(
                 F.col("dst"), F.expr("rank_e12 div outdeg").alias("contrib")
             )
             .groupBy("dst")
             .agg(F.sum("contrib").alias("in_mass"))
         )
-        if all_nodes_receive:
-            # symmetrized edges: the groupBy already covers every node
-            ranks = in_mass.select(F.col("dst").alias("node"), "in_mass")
+        if all_receive and seeds is None:
+            ranks = in_mass.select(
+                F.col("dst").alias("node"), F.lit(1).alias("__s"), "in_mass")
         else:
             ranks = nodes.join(in_mass, nodes.node == in_mass.dst, "left")
-        ranks = (
-            ranks.crossJoin(n1)
-            .select(
-                "node",
-                F.expr(
-                    f"{base} + ({DAMP_NUM}L * coalesce(in_mass, 0L)) "
-                    f"div {DAMP_DEN}L"
-                ).alias("rank_e12"),
-            )
-        )
-        # truncate lineage periodically (closure hygiene); lazy so rounds
-        # fuse into one submitted job. r6: every 8 rounds instead of every
-        # round — a checkpoint materializes a node-sized RDD AND erases
-        # the contribution groupBy's hash(dst) partitioning, which the
-        # next round's join can otherwise reuse for its rank side; at the
-        # catalog's 5 iterations no intermediate checkpoint fires and the
-        # plan stays shallow (linear in rounds).
+        ranks = ranks.select("node", step)
+        # truncate lineage every 8 rounds (closure hygiene); lazy so rounds
+        # fuse into one submitted job. r6: a checkpoint materializes a
+        # node-sized RDD AND erases the groupBy's hash(dst) partitioning,
+        # which the next round's join can otherwise reuse; at the
+        # catalog's 5 iterations none fires and the plan stays shallow.
         if (_i + 1) % 8 == 0:
             ranks = ranks.localCheckpoint(eager=False)
-    # materialize the final ranks while `weighted` is cached, then drop the
-    # cache: the caller gets a checkpointed RDD scan and a later identical
-    # pagerank call (e.g. a bench rep) cannot silently reuse this call's
-    # cached edge table — every invocation recomputes from its inputs.
-    if n_iters > 0:
-        ranks = ranks.localCheckpoint()
-    weighted.unpersist(blocking=True)
+    # materialize while the caches are alive, then drop them: the caller
+    # gets a checkpointed RDD scan and a later identical call (e.g. a
+    # bench rep) cannot silently reuse this call's cached edge table
+    ranks = ranks.localCheckpoint()
+    for df in (weighted, cache):
+        df.unpersist(blocking=True)
     return ranks
 
 
-def label_propagation(edges: DataFrame, n_iters: int = 3,
-                      all_nodes_receive: bool = False,
-                      broadcast_labels: bool = False) -> DataFrame:
+def label_propagation(edges: DataFrame, n_iters: int = 3) -> DataFrame:
     """``edges(src, dst)`` -> ``(node, label)``: synchronous label
     propagation (community detection), the GraphFrames-style LPA the
     north-star names for entity-canonicalization neighborhoods.
@@ -201,60 +278,33 @@ def label_propagation(edges: DataFrame, n_iters: int = 3,
     hash-matches: every node starts labeled with its own id; each
     synchronous round it adopts the most frequent label among its
     in-neighbors, ties broken by SMALLEST label (GraphFrames leaves the
-    tie-break undefined — pinning it is what makes this testable).
-    Iterations are fixed (no convergence test). The synchronous update
-    shares sync-LPA's documented caveat (GraphFrames docs): bipartite-ish
-    regions can oscillate rather than converge — fixed iterations keep
-    that deterministic too.
+    tie-break undefined — pinning it is what makes this testable). A node
+    with no in-neighbors keeps its current label. Iterations are fixed
+    (no convergence test). The synchronous update shares sync-LPA's
+    documented caveat (GraphFrames docs): bipartite-ish regions can
+    oscillate rather than converge — fixed iterations keep that
+    deterministic too.
 
-    By default a node with no in-neighbors keeps its current label (one
-    extra node-sized left-join per round). ``all_nodes_receive=True``
-    asserts every node has in-edges — true by construction for
-    ``symmetrize``d edge tables, which is what the catalog callers pass —
-    and drops that join, leaving ONE shuffle per round; under the flag a
-    node with no in-edges silently vanishes from the result, so it stays
-    opt-in (same contract as ``pagerank``).
-
-    Scale notes (100 TB): per round, ONE shuffle — edges ⋈ labels on src
-    (labels is node-sized, the small side once edges >> nodes) — then a
-    two-level partial-agg count and a struct-min argmin, both map-side
-    combinable. localCheckpoint truncates lineage per round exactly like
-    pagerank/ontology closure.
-
-    ``broadcast_labels=True`` (r6) is LPA's sibling of pagerank's
-    ``broadcast_ranks``: it asserts the node-sized label frame fits the
-    broadcast cap, caches the deduped edge table clustered by hash(dst),
-    and runs each round as broadcast-join + two aggs that BOTH ride the
-    cache's partitioning (hash(dst) satisfies the (dst, label) count's
-    clustering requirement — grouping-key superset rule — and the argmin
-    groups by the same dst) — zero exchanges per round. Labels are
-    bit-identical (the argmin tie-break is value-based, not
-    placement-based); default stays the node-count-unbounded shape.
+    Plan per round: the edge cache joins the node-sized label frame on
+    src, then a two-level partial-agg count and a struct-min argmin. The
+    size rule (nodes × label-row width against
+    ``autoBroadcastJoinThreshold``) picks broadcast rounds — both aggs
+    ride the dst-clustered cache (hash(dst) satisfies the (dst, label)
+    count by the grouping-key superset rule, and the argmin groups by the
+    same dst), so zero exchanges per round — or shuffle rounds. The
+    per-round keep-label left-join runs only if some node has no in-edge.
+    Labels are bit-identical either way (the argmin tie-break is
+    value-based, not placement-based).
     """
-    if broadcast_labels:
-        n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        edges = (
-            edges.select("src", "dst")
-            .repartition(n, F.col("dst"))
-            .dropDuplicates(["src", "dst"])
-            .persist()
-        )
-    else:
-        edges = edges.select("src", "dst").distinct().localCheckpoint()
-    init = edges.select(F.col("src").alias("node"))
-    if not all_nodes_receive:
-        # dst-only nodes exist when the input is not symmetrized; they
-        # must start labeled too or they could never appear at all
-        init = init.unionByName(edges.select(F.col("dst").alias("node")))
-    labels = (
-        init.distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint()
-    )
+    cache = _edge_cache(edges)
+    nodes = _node_frame(cache)
+    nodes, broadcast, all_receive = _strategy(
+        nodes, nodes.select("node", F.col("node").alias("label")))
+    labels = nodes.select("node", F.col("node").alias("label"))
+    edges, hint = _rounds_shape(cache, broadcast)
     for _ in range(n_iters):
-        lab_side = F.broadcast(labels) if broadcast_labels else labels
         counts = (
-            edges.join(lab_side, edges.src == labels.node)
+            edges.join(hint(labels), edges.src == labels.node)
             .groupBy(F.col("dst").alias("node"), "label")
             .agg(F.count("*").alias("cnt"))
         )
@@ -272,104 +322,79 @@ def label_propagation(edges: DataFrame, n_iters: int = 3,
             )
             .select("node", F.col("m.label").alias("adopted"))
         )
-        if all_nodes_receive:
+        if all_receive:
             labels = adopted.select("node", F.col("adopted").alias("label"))
         else:
             labels = labels.join(adopted, "node", "left").select(
                 "node", F.coalesce("adopted", "label").alias("label")
             )
-        # same lazy fusing as pagerank
+        # lazy: rounds fuse into one submitted job
         labels = labels.localCheckpoint(eager=False)
-    if broadcast_labels:
-        # same cache-hygiene close as pagerank: materialize while the edge
-        # cache is alive, then drop it so repeat invocations recompute
-        if n_iters > 0:
-            labels = labels.localCheckpoint()
-        edges.unpersist(blocking=True)
+    # same cache-hygiene close as personalized_pagerank
+    labels = labels.localCheckpoint()
+    for df in (edges, cache):
+        df.unpersist(blocking=True)
     return labels
 
 
 def bfs_distances(edges: DataFrame, sources: list[str],
-                  max_depth: int = 10,
-                  broadcast_frontier: bool = False) -> DataFrame:
+                  max_depth: int = 10) -> DataFrame:
     """``edges(src, dst)`` + source node ids -> ``(node, dist)``: shortest
     hop count from the nearest source, breadth-first (GraphFrames
     ``shortestPaths``-style landmark distances, the third of the graph
     trio after centrality and communities).
 
-    Deterministic and oracle-unrollable: distances are BIGINT, each
+    :func:`sssp_distances` with unit weights: BIGINT distances, each
     synchronous round relaxes ``dist(v) = min(dist(v), min over
     in-neighbors u of dist(u)+1)``, and rounds are fixed at ``max_depth``
     (nodes farther than that, or unreachable, are absent from the
     result — document at call sites). Frontier-only optimization is
-    deliberately skipped: the full-relaxation round is one join + one
-    partial-agg min per round, the same shuffle count, and keeps the
-    DuckDB twin a pure per-round CTE.
+    deliberately skipped: the full-relaxation round costs the same
+    exchanges and keeps the DuckDB twin a pure per-round CTE. Same size
+    rule and plan as SSSP.
+    """
+    return sssp_distances(
+        edges.select("src", "dst", F.lit(1).cast("long").alias("w")),
+        sources, n_rounds=max_depth)
 
-    Scale notes (100 TB): per round ONE shuffle (edges ⋈ dist on src)
-    plus a map-side-combinable min agg; dist is node-sized, the small
-    side once edges >> nodes. Lazy localCheckpoint per round fuses the
-    rounds into one submitted job, as in pagerank/LPA.
 
-    ``broadcast_frontier=True`` (r6, the pagerank ``broadcast_ranks``
-    contract: the reached-node frame must fit the broadcast cap): the
-    "keep the old distance" term of the relaxation is folded into the
-    join itself by appending one zero-weight self-loop per node (min over
-    self ∪ in-neighbors ≡ the old union-then-min — the connected
-    components fold, applied to distances), so a round is broadcast-join
-    + one min agg riding the edge cache's hash(dst) clustering: zero
-    exchanges per round. Sources absent from the graph get self-loops
-    too, so they stay in the result exactly as in the union shape.
+def sssp_distances(edges: DataFrame, sources: list[str],
+                   n_rounds: int = 4) -> DataFrame:
+    """Single-source shortest path distances over ``edges(src, dst, w)``
+    with non-negative BIGINT weights. Synchronous Bellman-Ford relaxation
+    for a FIXED number of rounds (so the unrolled-CTE DuckDB oracle
+    matches bit-for-bit; BIGINT adds are order-independent): per round,
+    every edge offers ``dist[src] + w`` to its dst and each node keeps the
+    minimum. Nodes not reached within ``n_rounds`` relaxations are absent
+    (documented contract — at round k the result equals true shortest
+    paths using ≤ k edges). Parallel edges ride the relaxation's min.
+
+    The relax loop (BFS runs it with unit weights): the "keep the old
+    distance" term is folded into the join by appending one zero-weight
+    self-loop per node AND per source (min over self ∪ in-neighbors ≡
+    union-then-min — the connected-components fold applied to distances;
+    sources absent from the graph stay in the result). A round is then
+    one join + one map-side-combinable min agg. The size rule (nodes ×
+    distance-row width against ``autoBroadcastJoinThreshold``) picks
+    broadcast rounds — looped cache clustered by hash(dst), zero exchanges
+    per round — or shuffle rounds on a hash(src)-clustered cache.
     """
     if not sources:
-        raise ValueError("bfs_distances needs at least one source node")
-    spark = edges.sparkSession
+        raise ValueError("graph distances need at least one source node")
     ntype = dict(edges.dtypes)["src"]
-    dist = spark.createDataFrame(
+    dist = edges.sparkSession.createDataFrame(
         [(s, 0) for s in sources], f"node {ntype}, dist long"
     )
-    if broadcast_frontier:
-        return _relax_rounds_broadcast(edges, dist, F.lit(1).cast("long"),
-                                       max_depth)
-    edges = edges.select("src", "dst").distinct().localCheckpoint()
-    for _ in range(max_depth):
-        relaxed = (
-            edges.join(dist, edges.src == dist.node)
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("dist") + F.lit(1).cast("long")).alias("dist"),
-            )
-        )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-    return dist
-
-
-def _relax_rounds_broadcast(edges: DataFrame, dist: DataFrame, w,
-                            n_rounds: int) -> DataFrame:
-    """Shared zero-shuffle-round relaxation for BFS/SSSP (r6).
-
-    ``edges`` must carry src/dst (and, for SSSP, a ``w`` column the
-    caller folds into the ``w`` expression); ``w`` is the per-edge
-    distance increment expression (1 for BFS, ``F.col("w")`` for SSSP).
-    Appends a zero-weight self-loop for every node AND every source, so
-    ``min(dist(u) + w)`` over the looped in-neighborhood reproduces the
-    union-then-min relaxation exactly; the looped table is cached
-    clustered by hash(dst) and each round is broadcast-join + one min
-    agg riding that clustering — no exchange inside a round."""
-    n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # `weighted` is referenced three times below (nodes twice, looped
-    # once) and re-evaluated per reference (no cross-branch CSE) — an
-    # eager localCheckpoint here was A/B'd at sf1x and measured SLOWER
-    # (bfs 4.30 -> 4.88 s interleaved, BENCH/s3_symmetrize_ab.json): the
-    # duplicate branches run concurrently on idle cores while the
-    # checkpoint pays a serial 2x-edge-row materialization up front.
-    weighted = edges.select("src", "dst", w.alias("_w"))
-    zero = F.lit(0).cast("long")
+    # The edge projection is not checkpointed: it is evaluated once per
+    # reference (no cross-branch CSE; three here) and those branches run
+    # concurrently on idle cores — building the node set with one
+    # explode instead of the union measured about 0.5 s slower for
+    # graph_bfs on the sf1x proxy at 4 cores. The sf1x A/B once cited
+    # against an eager checkpoint here (BENCH/s3_symmetrize_ab.json, bfs
+    # 4.30 -> 4.88 s) varied the explode-symmetrize AND that checkpoint
+    # together, so it does not isolate the checkpoint; only its pagerank
+    # row (no relax loop) isolates symmetrize.
+    weighted = edges.select("src", "dst", F.col("w").cast("long").alias("w"))
     nodes = (
         weighted.select(F.col("src").alias("v"))
         .unionByName(weighted.select(F.col("dst").alias("v")))
@@ -379,75 +404,32 @@ def _relax_rounds_broadcast(edges: DataFrame, dist: DataFrame, w,
     looped = (
         weighted.unionByName(
             nodes.select(F.col("v").alias("src"), F.col("v").alias("dst"),
-                         zero.alias("_w"))
+                         F.lit(0).cast("long").alias("w"))
         )
-        .repartition(n, F.col("dst"))
-        .dropDuplicates(["src", "dst", "_w"])
+        .repartition(_partitions(edges), F.col("dst"))
+        .dropDuplicates(["src", "dst", "w"])
         .persist()
     )
+    # after the dedup each node has exactly one zero-weight self-loop, so
+    # those rows are the node frame (every node the dst of its own loop)
+    loops = looped.filter(
+        (F.col("src") == F.col("dst")) & (F.col("w") == 0)
+    ).select(F.col("dst").alias("node"), F.lit(1).alias("has_in"))
+    _, broadcast, _ = _strategy(loops, dist)
+    edges, hint = _rounds_shape(looped, broadcast)
     for _ in range(n_rounds):
         dist = (
-            looped.join(F.broadcast(dist), looped.src == dist.node)
+            edges.join(hint(dist), edges.src == dist.node)
             .select(
                 F.col("dst").alias("node"),
-                (F.col("dist") + F.col("_w")).alias("dist"),
+                (F.col("dist") + F.col("w")).alias("dist"),
             )
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
     dist = dist.localCheckpoint()
-    looped.unpersist(blocking=True)
-    return dist
-
-
-def sssp_distances(edges: DataFrame, sources: list[str],
-                   n_rounds: int = 4,
-                   broadcast_frontier: bool = False) -> DataFrame:
-    """Single-source shortest path distances over ``edges(src, dst, w)``
-    with non-negative BIGINT weights — the weighted sibling of
-    :func:`bfs_distances`. Synchronous Bellman-Ford relaxation for a
-    FIXED number of rounds (so the unrolled-CTE DuckDB oracle matches
-    bit-for-bit; BIGINT adds are order-independent): per round, every
-    edge offers ``dist[src] + w`` to its dst and each node keeps the
-    minimum. Nodes not reached within ``n_rounds`` relaxations are
-    absent (documented contract — at round k the result equals true
-    shortest paths using ≤ k edges). Parallel edges collapse to their
-    min weight up front. Same Spark shape as BFS: one shuffle join +
-    map-side-combinable min agg per round, lazy localCheckpoint fuses
-    rounds into one job. ``broadcast_frontier=True``: zero-shuffle
-    rounds via the shared self-loop fold (see
-    :func:`_relax_rounds_broadcast`; parallel edges then ride the
-    relaxation's min instead of a pre-collapse — same distances)."""
-    if not sources:
-        raise ValueError("sssp_distances needs at least one source node")
-    spark = edges.sparkSession
-    ntype = dict(edges.dtypes)["src"]
-    dist0 = spark.createDataFrame(
-        [(s, 0) for s in sources], f"node {ntype}, dist long"
-    )
-    if broadcast_frontier:
-        return _relax_rounds_broadcast(
-            edges, dist0, F.col("w").cast("long"), n_rounds)
-    edges = (
-        edges.select("src", "dst", F.col("w").cast("long").alias("w"))
-        .groupBy("src", "dst").agg(F.min("w").alias("w"))
-        .localCheckpoint()
-    )
-    dist = dist0
-    for _ in range(n_rounds):
-        relaxed = (
-            edges.join(dist, edges.src == dist.node)
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("dist") + F.col("w")).alias("dist"),
-            )
-        )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
+    for df in (edges, looped):
+        df.unpersist(blocking=True)
     return dist
 
 
@@ -467,7 +449,11 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     equi-joins (wedge build on the apex, closing-edge membership on
     (y1, y2)), explode of the TRIANGLE rows only (bounded by the result,
     not the graph), final partial-agg count. All BIGINT/comparison ops —
-    bit-exact in DuckDB, no float risk."""
+    bit-exact in DuckDB, no float risk.
+
+    Not explain-safe: building the DataFrame runs a job (the canonical
+    edge table is materialized with an eager ``localCheckpoint``), so a
+    plan-only consumer pays for the scan, exchange and dedup."""
     e = (
         edges.select(F.col("src").alias("s"), F.col("dst").alias("t"))
         .filter(F.col("s") != F.col("t"))
@@ -535,11 +521,13 @@ def symmetrize(pairs: DataFrame) -> DataFrame:
     caller) child once PER DIRECTION. A map-side
     ``explode(array(struct(src,dst), struct(dst,src)))`` rewrite that
     evaluates the child once was A/B'd interleaved at sf1x
-    (BENCH/s3_symmetrize_ab.json): pagerank 5.59 -> 5.96 s, bfs 4.30 ->
-    4.88 s, ppr/lpa/sssp a wash — the union's duplicate branches run as
-    INDEPENDENT CONCURRENT stage DAGs that fill otherwise-idle cores
-    (guide §2.6), while the fused shape serializes the same bytes through
-    one chain. The union shape is kept deliberately."""
+    (BENCH/s3_symmetrize_ab.json): pagerank 5.59 -> 5.96 s, ppr/lpa/sssp
+    a wash. (Its bfs row, 4.30 -> 4.88 s, also varied an eager checkpoint
+    in the relax loop, so only the pagerank row isolates symmetrize.) The
+    union's duplicate branches run as INDEPENDENT CONCURRENT stage DAGs
+    that fill otherwise-idle cores (guide §2.6), while the fused shape
+    serializes the same bytes through one chain. The union shape is kept
+    deliberately."""
     return pairs.select("src", "dst").unionByName(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -608,80 +596,3 @@ def kcore_nodes(edges: DataFrame, k: int, n_rounds: int = 4) -> DataFrame:
         sym.groupBy(F.col("src").alias("node"))
         .agg(F.count("*").cast("long").alias("degree"))
     )
-
-
-def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
-                          n_iters: int = 5,
-                          broadcast_ranks: bool = False) -> DataFrame:
-    """``edges(src, dst)`` + ``seeds(node)`` -> ``(node, rank_e12)``;
-    BIGINT fixed-point PERSONALIZED PageRank (Page et al. 1999 §6 /
-    Jeh & Widom WWW'03 topic-sensitive variant): the teleport mass
-    returns only to the seed set, so ranks measure proximity TO THE SEEDS
-    through the graph — the entity-centric relevance score a KG serves
-    ("which entities matter around this incident type / this customer
-    cohort"), where global PageRank measures importance to everyone.
-
-        r_0(v)     = [v ∈ S] · (SCALE div |S|)
-        r_{t+1}(v) = [v ∈ S] · (15·(SCALE div |S|)) div 100
-                     + (85·Σ_{(u,v)∈E} r_t(u) div outdeg(u)) div 100
-
-    Same exact-integer discipline as :func:`pagerank` (no float anywhere,
-    ``div`` matches DuckDB ``//`` on non-negative BIGINTs), so the
-    unrolled-CTE oracle matches bit-for-bit. Seeds outside the graph's
-    node set are ignored (semi-join); raises via the 1-row broadcast
-    division if the surviving seed set is empty (0 seeds = undefined
-    teleport). Same plan shape per round as pagerank: one join + one
-    map-side-combinable sum; the seed flag rides the node frame as a
-    column, costing nothing extra. ``broadcast_ranks=True`` switches to
-    the zero-shuffle-round strategy exactly as in :func:`pagerank` (same
-    node-table-fits-broadcast contract; the per-round ``flagged``
-    left-join stays — it joins two node-sized frames).
-    """
-    weighted = _weighted_edges(
-        edges, cluster="dst" if broadcast_ranks else "src")
-    nodes = (
-        weighted.select(F.col("src").alias("node"))
-        .unionByName(weighted.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    flagged = nodes.join(
-        seeds.select("node").distinct().withColumn("__s", F.lit(1)),
-        "node", "left",
-    ).select("node", F.coalesce("__s", F.lit(0)).alias("__s"))
-    flagged = flagged.localCheckpoint()
-    ns1 = F.broadcast(
-        flagged.agg(F.sum("__s").cast("long").alias("n_seeds")))
-    base = (f"(__s * {DAMP_DEN - DAMP_NUM}L * ({SCALE}L div n_seeds)) "
-            f"div {DAMP_DEN}L")
-    ranks = flagged.crossJoin(ns1).select(
-        "node",
-        F.expr(f"__s * ({SCALE}L div n_seeds)").alias("rank_e12"),
-    )
-    for _ in range(n_iters):
-        rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
-        in_mass = (
-            weighted.join(rank_side, weighted.src == ranks.node)
-            .select(
-                F.col("dst"), F.expr("rank_e12 div outdeg").alias("contrib")
-            )
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("in_mass"))
-        )
-        ranks = (
-            flagged.join(in_mass, flagged.node == in_mass.dst, "left")
-            .crossJoin(ns1)
-            .select(
-                "node",
-                F.expr(
-                    f"{base} + ({DAMP_NUM}L * coalesce(in_mass, 0L)) "
-                    f"div {DAMP_DEN}L"
-                ).alias("rank_e12"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    # same cache-hygiene close as pagerank: materialize, then drop the
-    # edge cache so repeat invocations recompute from their inputs
-    if n_iters > 0:
-        ranks = ranks.localCheckpoint()
-    weighted.unpersist(blocking=True)
-    return ranks

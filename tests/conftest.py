@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -27,3 +28,35 @@ def corpus_dir(tmp_path_factory):
 @pytest.fixture(scope="session")
 def corpus(corpus_dir):
     return datagen.generate(n_incidents=30, seed=42)
+
+
+@pytest.fixture
+def broadcast_threshold(spark):
+    """``with broadcast_threshold(v):`` runs the block with
+    ``spark.sql.autoBroadcastJoinThreshold`` set to ``v`` (``-1`` = never
+    broadcast) and restores the session's value after it."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+
+    @contextmanager
+    def setting(value):
+        old = spark.conf.get(key)
+        spark.conf.set(key, str(value))
+        try:
+            yield
+        finally:
+            spark.conf.set(key, old)
+
+    return setting
+
+
+@pytest.fixture
+def both_strategies(broadcast_threshold):
+    """Run ``fn()`` under the session's broadcast threshold, then again
+    with broadcasting off, and return both results — the two sides of
+    the graph loops' size rule."""
+    def run(fn):
+        first = fn()
+        with broadcast_threshold(-1):
+            return first, fn()
+
+    return run

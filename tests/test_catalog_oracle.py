@@ -24,3 +24,14 @@ from check_oracle import SF_DIR, run_checks  # noqa: E402
 def test_full_catalog_matches_oracles(spark):
     failed = run_checks(spark)
     assert not failed, f"catalog entries failing oracle check: {failed}"
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="driver testdata absent")
+@pytest.mark.parametrize("name", ["graph_pagerank", "graph_ppr", "graph_lpa",
+                                  "graph_bfs", "graph_sssp"])
+def test_graph_entries_match_oracles_on_shuffle_rounds(
+        spark, broadcast_threshold, name):
+    # broadcasting off: the graph loops take the shuffle shape that large
+    # scale factors take, and must still hash-match the same oracles
+    with broadcast_threshold(-1):
+        assert not run_checks(spark, only={name})

@@ -529,17 +529,34 @@ def test_pagerank_duplicate_edges_collapse(spark):
     assert once == dup
 
 
-def test_pagerank_all_nodes_receive_equivalence(spark):
-    # on a symmetrized graph the no-left-join fast path is value-identical
+def test_pagerank_symmetrized_strategy_equivalence(spark, both_strategies):
+    # symmetrized: every node has an in-edge, so the per-round node join
+    # is skipped; broadcast and shuffle rounds must agree on every rank
     pairs = [("c", f"s{i}") for i in range(3)] + [("s0", "s1")]
     edges = pairs + [(b, a) for a, b in pairs]
     e = spark.createDataFrame(edges, "src string, dst string")
-    slow = {r.node: r.rank_e12 for r in graph.pagerank(e, 3).collect()}
-    fast = {
-        r.node: r.rank_e12
-        for r in graph.pagerank(e, 3, all_nodes_receive=True).collect()
-    }
-    assert slow == fast
+    bcast, shuffle = both_strategies(
+        lambda: {r.node: r.rank_e12 for r in graph.pagerank(e, 3).collect()})
+    assert bcast == shuffle
+    assert set(bcast) == {"c", "s0", "s1", "s2"}
+
+
+def test_src_only_node_kept_by_pagerank_and_lpa(spark, both_strategies):
+    # "z" has an out-edge but no in-edge: it must appear in both results,
+    # on both sides of the size rule, with the teleport-only rank and its
+    # own label
+    edges = [("a", "b"), ("b", "a"), ("z", "a")]
+    e = spark.createDataFrame(edges, "src string, dst string")
+    for ranks in both_strategies(
+            lambda: {r.node: r.rank_e12
+                     for r in graph.pagerank(e, 3).collect()}):
+        assert set(ranks) == {"a", "b", "z"}
+        assert ranks["z"] == (15 * (graph.SCALE // 3)) // 100
+    for labels in both_strategies(
+            lambda: {r.node: r.label
+                     for r in graph.label_propagation(e, 2).collect()}):
+        assert labels == _lpa_reference(edges, 2)
+        assert labels["z"] == "z"
 
 
 def test_sssp_prefers_cheap_long_path(spark):
@@ -863,28 +880,26 @@ def test_lpa_duplicate_edges_collapse(spark):
 
 
 def test_lpa_directed_keeps_no_in_edge_nodes(spark):
-    # directed chain a->b->c: "a" has no in-edges. The safe default keeps
-    # it (with its own label) and floods its label down the chain; the
-    # fast path would silently drop it.
+    # directed chain a->b->c: "a" has no in-edges, so the per-round
+    # keep-label join runs and keeps it (with its own label) while its
+    # label floods down the chain.
     edges = [("a", "b"), ("b", "c")]
     got = _lpa_dict(spark, edges, n_iters=2)
     assert got == {"a": "a", "b": "a", "c": "a"}
     assert got == _lpa_reference(edges, 2)
 
 
-def test_lpa_all_nodes_receive_equivalence(spark):
-    # on symmetrized edges both paths compute identical labels; the flag
-    # only drops the per-round keep-label left-join
+def test_lpa_symmetrized_strategy_equivalence(spark, both_strategies):
+    # on symmetrized edges the keep-label join is skipped; broadcast and
+    # shuffle rounds compute the reference's labels
     pairs = [("a1", "a2"), ("a2", "a3"), ("a1", "a3"), ("a1", "b1"),
              ("b1", "b2")]
     edges = pairs + [(d, s) for s, d in pairs]
     e = spark.createDataFrame(edges, "src string, dst string")
-    slow = {r.node: r.label
-            for r in graph.label_propagation(e, 3).collect()}
-    fast = {r.node: r.label
-            for r in graph.label_propagation(
-                e, 3, all_nodes_receive=True).collect()}
-    assert slow == fast
+    bcast, shuffle = both_strategies(
+        lambda: {r.node: r.label
+                 for r in graph.label_propagation(e, 3).collect()})
+    assert bcast == shuffle == _lpa_reference(edges, 3)
 
 
 # --- as-of join -------------------------------------------------------------
@@ -1029,6 +1044,9 @@ def test_ppr_seeds_outside_graph_ignored(spark):
     # only 'a' survives the semi-join: teleport unit is SCALE div 1
     assert set(ranks) == {"a", "b"}
     assert ranks["a"] > ranks["b"] > 0
+    # no seed in the graph: the teleport is undefined
+    with pytest.raises(ValueError):
+        _ppr_dict(spark, [("a", "b"), ("b", "a")], ["ghost"], n_iters=1)
 
 
 # ---------------------------------------------------------------- gapfill/scd2

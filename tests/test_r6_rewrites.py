@@ -213,11 +213,12 @@ def test_ancestor_closure_dag_multiple_parents(spark):
     assert _rows(ontology.ancestor_closure(df, reflexive=False)) == expect
 
 
-def test_pagerank_broadcast_rounds_equivalence(spark):
-    # broadcast_ranks switches the physical strategy (dst-clustered edge
-    # cache + per-round broadcast hash join) but must not change a single
-    # rank; graph has a hub, a chain, a 2-cycle and a dangling-free
-    # symmetrized variant plus a node absent from src (dst-only)
+def test_pagerank_broadcast_rounds_equivalence(spark, both_strategies):
+    # the size rule switches the physical strategy (dst-clustered edge
+    # cache + per-round broadcast hash join, or src-clustered cache +
+    # shuffle join) but must not change a single rank; graph has a hub,
+    # a chain, a 2-cycle and a dangling-free symmetrized variant plus a
+    # node absent from src (dst-only)
     from multilingual_wiki_event_pipeline_spark.operators import graph
 
     raw = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "a"),
@@ -225,27 +226,44 @@ def test_pagerank_broadcast_rounds_equivalence(spark):
     edges = spark.createDataFrame(raw, "src string, dst string")
     for sym in (False, True):
         e = graph.symmetrize(edges) if sym else edges
-        for anr in ((False, True) if sym else (False,)):
-            ref = graph.pagerank(e, n_iters=4, all_nodes_receive=anr)
-            got = graph.pagerank(e, n_iters=4, all_nodes_receive=anr,
-                                 broadcast_ranks=True)
-            assert _rows(got) == _rows(ref), (sym, anr)
+        bcast, shuffle = both_strategies(
+            lambda: _rows(graph.pagerank(e, n_iters=4)))
+        assert bcast == shuffle, sym
 
 
-def test_ppr_broadcast_rounds_equivalence(spark):
+def test_pagerank_equals_ppr_seeded_with_every_node(spark):
+    # pagerank runs personalized_pagerank with every node as a seed; an
+    # explicit all-node seed frame keeps the per-round node join, so this
+    # also pins the keep-join against the skipped one (symmetrized case)
+    from multilingual_wiki_event_pipeline_spark.operators import graph
+
+    raw = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "a"),
+           ("c", "e"), ("e", "e")]
+    edges = spark.createDataFrame(raw, "src string, dst string")
+    seeds = spark.createDataFrame(
+        [(n,) for n in sorted({n for pair in raw for n in pair})],
+        "node string")
+    for sym in (False, True):
+        e = graph.symmetrize(edges) if sym else edges
+        for n_iters in (0, 1, 5, 9):
+            assert (_rows(graph.pagerank(e, n_iters))
+                    == _rows(graph.personalized_pagerank(e, seeds, n_iters))
+                    ), (sym, n_iters)
+
+
+def test_ppr_broadcast_rounds_equivalence(spark, both_strategies):
     from multilingual_wiki_event_pipeline_spark.operators import graph
 
     raw = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "b")]
     edges = graph.symmetrize(
         spark.createDataFrame(raw, "src string, dst string"))
     seeds = spark.createDataFrame([("a",), ("d",), ("zzz",)], "node string")
-    ref = graph.personalized_pagerank(edges, seeds, n_iters=4)
-    got = graph.personalized_pagerank(edges, seeds, n_iters=4,
-                                      broadcast_ranks=True)
-    assert _rows(got) == _rows(ref)
+    bcast, shuffle = both_strategies(
+        lambda: _rows(graph.personalized_pagerank(edges, seeds, n_iters=4)))
+    assert bcast == shuffle
 
 
-def test_lpa_broadcast_labels_equivalence(spark):
+def test_lpa_broadcast_rounds_equivalence(spark, both_strategies):
     from multilingual_wiki_event_pipeline_spark.operators import graph
 
     raw = [("a", "b"), ("b", "a"), ("b", "c"), ("c", "b"), ("d", "a"),
@@ -253,16 +271,12 @@ def test_lpa_broadcast_labels_equivalence(spark):
     edges = spark.createDataFrame(raw, "src string, dst string")
     for sym in (False, True):
         e = graph.symmetrize(edges) if sym else edges
-        for anr in ((False, True) if sym else (False,)):
-            ref = graph.label_propagation(e, n_iters=3,
-                                          all_nodes_receive=anr)
-            got = graph.label_propagation(e, n_iters=3,
-                                          all_nodes_receive=anr,
-                                          broadcast_labels=True)
-            assert _rows(got) == _rows(ref), (sym, anr)
+        bcast, shuffle = both_strategies(
+            lambda: _rows(graph.label_propagation(e, n_iters=3)))
+        assert bcast == shuffle, sym
 
 
-def test_bfs_broadcast_frontier_equivalence(spark):
+def test_bfs_broadcast_rounds_equivalence(spark, both_strategies):
     # chain + branch + cycle + input self-loop + unreachable node + a
     # source that is absent from the graph (must stay in the result)
     from multilingual_wiki_event_pipeline_spark.operators import graph
@@ -272,15 +286,14 @@ def test_bfs_broadcast_frontier_equivalence(spark):
     edges = spark.createDataFrame(raw, "src string, dst string")
     for srcs in (["a"], ["a", "q"], ["ghost"], ["a", "ghost"]):
         for depth in (0, 1, 3, 6):
-            ref = graph.bfs_distances(edges, srcs, max_depth=depth)
-            got = graph.bfs_distances(edges, srcs, max_depth=depth,
-                                      broadcast_frontier=True)
-            assert _rows(got) == _rows(ref), (srcs, depth)
+            bcast, shuffle = both_strategies(
+                lambda: _rows(graph.bfs_distances(edges, srcs, depth)))
+            assert bcast == shuffle, (srcs, depth)
 
 
-def test_sssp_broadcast_frontier_equivalence(spark):
-    # parallel edges with different weights (pre-collapse vs relax-min),
-    # zero-weight edge, input self-loop, absent source
+def test_sssp_broadcast_rounds_equivalence(spark, both_strategies):
+    # parallel edges with different weights, zero-weight edge, input
+    # self-loop, absent source
     from multilingual_wiki_event_pipeline_spark.operators import graph
 
     raw = [("a", "b", 5), ("a", "b", 2), ("b", "c", 1), ("a", "c", 9),
@@ -288,7 +301,33 @@ def test_sssp_broadcast_frontier_equivalence(spark):
     edges = spark.createDataFrame(raw, "src string, dst string, w long")
     for srcs in (["a"], ["a", "p"], ["ghost"]):
         for rounds in (0, 1, 2, 4):
-            ref = graph.sssp_distances(edges, srcs, n_rounds=rounds)
-            got = graph.sssp_distances(edges, srcs, n_rounds=rounds,
-                                       broadcast_frontier=True)
-            assert _rows(got) == _rows(ref), (srcs, rounds)
+            bcast, shuffle = both_strategies(
+                lambda: _rows(graph.sssp_distances(edges, srcs, rounds)))
+            assert bcast == shuffle, (srcs, rounds)
+
+
+@pytest.mark.parametrize("ntype,width", [("bigint", 24), ("string", 36)])
+def test_graph_strategy_size_rule(spark, broadcast_threshold, ntype, width):
+    # the one decision every graph loop makes: broadcast iff node count x
+    # row width (8 bytes overhead + the side schema's default sizes: 8 per
+    # BIGINT, 20 per STRING) fits autoBroadcastJoinThreshold, parsed by
+    # Spark's SQLConf; keep-join skipped iff every node has an in-edge
+    from multilingual_wiki_event_pipeline_spark.operators.graph import (
+        _strategy,
+    )
+
+    nodes = spark.range(100).select(
+        F.col("id").cast(ntype).alias("node"),
+        (F.col("id") % 2).cast("int").alias("has_in"))
+    side = nodes.select("node", F.lit(0).cast("long").alias("rank_e12"))
+    size = 100 * width
+    for threshold, fits in ((size + 1, True), (size, True),
+                            (size - 1, False), (-1, False),
+                            ("4k", True), ("3k", ntype == "bigint"),
+                            ("2k", False)):
+        with broadcast_threshold(threshold):
+            assert _strategy(nodes, side)[1:] == (fits, False), threshold
+    everyone = nodes.withColumn("has_in", F.lit(1))
+    with broadcast_threshold(size):
+        assert _strategy(everyone, side, F.sum("has_in").alias("s"))[1:] == (
+            True, True, 100)

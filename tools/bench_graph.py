@@ -9,6 +9,15 @@ nodes, fan-out per spoke drawn from a fixed md5-hash schedule so degree
 is skewed (a few hubs collect a large share of edges, the shape a real
 entity graph has) — and reports edges/sec per algorithm.
 
+The fixture is node-heavy (nodes ≈ directed edges/2), the case
+where round 6 measured broadcast rounds 1.6× slower. The graph loops
+choose their rounds by the size rule in operators/graph.py: broadcast
+while nodes × row width fits spark.sql.autoBroadcastJoinThreshold (64 MB
+from session.py). At the default 5M edges there are about 5M string-id
+nodes, so all three take SHUFFLE rounds: ranks and distances need 36
+B/row (180 MB) and labels 48 B/row (240 MB). Broadcast rounds start below
+about 1.86M nodes for PageRank/BFS and 1.40M for LPA.
+
 Usage: python tools/bench_graph.py [n_edges] [--reps N]
 Writes BENCH/graph_scale.json; prints one JSON line.
 """
@@ -71,27 +80,9 @@ def main() -> None:
     n_directed = sym.count()
 
     algos = {
-        "pagerank_5it": lambda: graph.pagerank(
-            sym, n_iters=5, all_nodes_receive=True
-        ).count(),
-        "lpa_3it": lambda: graph.label_propagation(
-            sym, n_iters=3, all_nodes_receive=True
-        ).count(),
+        "pagerank_5it": lambda: graph.pagerank(sym, n_iters=5).count(),
+        "lpa_3it": lambda: graph.label_propagation(sym, n_iters=3).count(),
         "bfs_4it": lambda: graph.bfs_distances(sym, ["h0"], max_depth=4).count(),
-        # r6 broadcast strategies, measured on the SAME node-heavy spoke
-        # fixture (nodes ~ edges/2) where they are EXPECTED to lose — the
-        # opt-in contract is nodes << edges; catalog-shaped wins are in
-        # BENCH/BASELINE.md (co-transaction graph, nodes bounded by
-        # dimensions)
-        "pagerank_5it_bcast": lambda: graph.pagerank(
-            sym, n_iters=5, all_nodes_receive=True, broadcast_ranks=True
-        ).count(),
-        "lpa_3it_bcast": lambda: graph.label_propagation(
-            sym, n_iters=3, all_nodes_receive=True, broadcast_labels=True
-        ).count(),
-        "bfs_4it_bcast": lambda: graph.bfs_distances(
-            sym, ["h0"], max_depth=4, broadcast_frontier=True
-        ).count(),
     }
     detail: dict[str, list[dict]] = {k: [] for k in algos}
     for name, fn in algos.items():  # untimed warm-up
