@@ -20,13 +20,16 @@ and exits 0/1 — shell-scriptable.
 --update runs a SPARQL 1.1 Update request instead (INSERT/DELETE DATA,
 DELETE WHERE, DELETE/INSERT ... WHERE; ';'-sequences) and REQUIRES
 --output: the store is immutable — the updated graph is written as a
-NEW parquet store, never in place (the same new-generation discipline
-as the streaming compactor's manifest pointer).
+NEW store, never in place (the same new-generation discipline as the
+streaming compactor's manifest pointer). An --output that already
+exists is refused.
 
 Scale notes: the query compiles to per-pattern filtered scans over the
 partitioned store + equi-joins (operators/bgp.py); constant predicates
 and subjects reach the parquet reader as pushed filters, and the
-bucket partitioning prunes subject-constant scans.
+bucket partitioning prunes subject-constant scans. --update writes its
+generation with `sinks.write_triples`, so an updated store keeps the
+same `bucket=` layout and the same pruning as the one it came from.
 """
 
 from __future__ import annotations
@@ -65,6 +68,7 @@ def main(argv: list[str]) -> int:
         sparql_query_form,
         sparql_update,
     )
+    from multilingual_wiki_event_pipeline_spark.sinks import write_triples
 
     text = args.query or args.update
     if text is None:
@@ -98,9 +102,14 @@ def main(argv: list[str]) -> int:
         if not args.output:
             ap.error("--update requires --output (stores are immutable; "
                      "the updated graph is written as a new store)")
-        sparql_update(triples, text).write.mode(
-            "error"  # refuse to clobber — a new store dir per generation
-        ).parquet(args.output)
+        # refuse to clobber — a new store dir per generation. Checked on
+        # the output's own Hadoop filesystem (HDFS/S3 paths included),
+        # because write_triples itself overwrites.
+        out = spark._jvm.org.apache.hadoop.fs.Path(args.output)
+        if out.getFileSystem(spark._jsc.hadoopConfiguration()).exists(out):
+            ap.error(f"--output {args.output} already exists (stores are "
+                     "immutable; write each generation to a new path)")
+        write_triples(sparql_update(triples, text), args.output)
         print(f"wrote {args.output}")
         return 0
 

@@ -23,7 +23,10 @@ sources/tables.py) with:
 The final triple sink partitions by a salted bucket of the subject so one
 hot incident type / mega-conversation cannot produce a straggler partition
 file (north rule's explicit skew handling; reference suffers exactly this,
-one mega event type = one giant loop iteration).
+one mega event type = one giant loop iteration). The write rebalances by
+bucket, so each bucket is one file; AQE splits a bucket across tasks (and
+files) only when its measured shuffle size exceeds the advisory partition
+size.
 """
 
 from __future__ import annotations
@@ -394,45 +397,45 @@ DEFAULT_SALT_BUCKETS = 64
 
 
 def write_triples(triples: DataFrame, path: str,
-                  n_buckets: int = DEFAULT_SALT_BUCKETS,
-                  n_write_tasks: int | None = None) -> None:
+                  n_buckets: int = DEFAULT_SALT_BUCKETS) -> None:
     """Partitioned triple write, salted on the subject hash.
 
     ``bucket = pmod(hash(subj), n_buckets)`` spreads hot subject RANGES
     (mega-conversation neighborhoods / hot incident types) across output
     partitions instead of partitioning by raw subject or incident_type,
     either of which recreates the reference's one-giant-iteration skew.
-    A single mega-subject still lands in one bucket — which is why write
-    parallelism is NOT capped at n_buckets: rows are repartitioned by
-    (bucket, row hash) into ``n_write_tasks`` tasks (default: the session's
-    shuffle parallelism), so one bucket can be written by many tasks and a
-    straggler bucket cannot serialize the write. On Iceberg this becomes a
-    ``bucket(n, subj)`` partition transform with fanout writers — identical
-    layout.
+
+    The write goes through a ``rebalance`` hint on ``bucket``: AQE puts
+    each bucket in one task and coalesces the small ones, so a bucket is
+    written as one file, not one file per write task. A single
+    mega-subject still lands in one bucket; AQE's skew split for
+    rebalances (``OptimizeSkewInRebalancePartitions``) divides that
+    bucket across tasks once its shuffle partition exceeds
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, so a straggler
+    bucket is split by its measured size, never by a fixed task count.
+    The split is by ranges of upstream map outputs: a bucket fed by one
+    map task stays one task.
+    On Iceberg this becomes a ``bucket(n, subj)`` partition transform
+    with fanout writers — identical layout.
     """
-    spark = triples.sparkSession
-    if n_write_tasks is None:
-        n_write_tasks = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     salted = triples.withColumn(
         "bucket", F.pmod(F.hash(F.col("subj")), F.lit(n_buckets))
     )
-    # row-level spread: hash of the full triple, not just subj, so a single
-    # hot subject's rows fan out across tasks within its bucket
-    salted.repartition(
-        n_write_tasks, F.col("bucket"), F.hash("subj", "pred", "obj")
-    ).write.mode("overwrite").partitionBy("bucket").parquet(path)
+    salted.hint("rebalance", "bucket").write.mode("overwrite").partitionBy(
+        "bucket").parquet(path)
 
 
 def write_quads(quads: DataFrame, path: str,
-                n_buckets: int = DEFAULT_SALT_BUCKETS,
-                n_write_tasks: int | None = None) -> None:
+                n_buckets: int = DEFAULT_SALT_BUCKETS) -> None:
     """Partitioned QUAD-store write: ``partitionBy(g, bucket)`` — the
     graph name is the leading partition column, so a ``GRAPH <iri>`` /
     ``FROM`` equality predicate prunes to that graph's directories
     before any row is read (the quads module's whole point), and within
     each graph the subject-hash salting of :func:`write_triples`
-    applies unchanged (hot subject ranges spread, one mega-subject
-    cannot serialize the write).
+    applies unchanged. The ``rebalance`` hint is on ``(g, bucket)``:
+    one file per graph bucket, and a bucket is split across tasks only
+    when its measured shuffle size exceeds AQE's advisory partition
+    size (see :func:`write_triples`).
 
     Contract: ``g`` must be LOW-CARDINALITY (collections, sources,
     snapshots — the reference's file-per-collection layout; thousands,
@@ -441,13 +444,8 @@ def write_quads(quads: DataFrame, path: str,
     write with :func:`write_triples` + a plain column instead. On
     Iceberg this becomes ``(identity(g), bucket(n, subj))`` partition
     transforms — identical pruning."""
-    spark = quads.sparkSession
-    if n_write_tasks is None:
-        n_write_tasks = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     salted = quads.withColumn(
         "bucket", F.pmod(F.hash(F.col("subj")), F.lit(n_buckets))
     )
-    salted.repartition(
-        n_write_tasks, F.col("g"), F.col("bucket"),
-        F.hash("subj", "pred", "obj"),
-    ).write.mode("overwrite").partitionBy("g", "bucket").parquet(path)
+    salted.hint("rebalance", "g", "bucket").write.mode(
+        "overwrite").partitionBy("g", "bucket").parquet(path)

@@ -39,7 +39,7 @@ def store_dir(spark, tmp_path_factory):
         rows, "subj string, pred string, obj string"
     )
     path = str(tmp_path_factory.mktemp("triples") / "store")
-    write_triples(df, path, n_buckets=2, n_write_tasks=2)
+    write_triples(df, path, n_buckets=2)
     return path
 
 
@@ -92,7 +92,8 @@ def test_update_writes_new_store_never_in_place(
     ])
     assert rc == 0
     got = sorted(duckdb.sql(
-        f"SELECT subj, pred, obj FROM '{out}/*.parquet'"
+        f"SELECT subj, pred, obj FROM read_parquet('{out}/*/*.parquet', "
+        "hive_partitioning = true)"
     ).fetchall())
     assert got == [
         ("e1", "rdfs:label", "error"),
@@ -106,6 +107,13 @@ def test_update_writes_new_store_never_in_place(
         f"SELECT COUNT(*) FROM '{store_dir}/**/*.parquet'"
     ).fetchone()[0]
     assert orig == 4
+    # a second generation into the same --output is refused
+    with pytest.raises(SystemExit):
+        query_main([
+            "--store", store_dir,
+            "--update", 'INSERT DATA { e4 rdfs:label "again" }',
+            "--output", out,
+        ])
 
 
 def test_update_without_output_errors(query_main, store_dir):
@@ -153,6 +161,12 @@ def test_quad_store_graph_query_end_to_end(query_main, spark, tmp_path,
     )
     assert len(gdirs) == 3
     assert any(os.listdir(os.path.join(store, gdirs[0])))
+    # the rebalance write gives each (g, bucket) dir exactly one file
+    bdirs = [os.path.join(store, g, b) for g in gdirs
+             for b in os.listdir(os.path.join(store, g))]
+    assert bdirs and all(
+        sum(f.endswith(".parquet") for f in os.listdir(d)) == 1
+        for d in bdirs)
     rc = query_main([
         "--store", store,
         "--query",

@@ -19,6 +19,10 @@ from multilingual_wiki_event_pipeline_spark.sinks import (
 from multilingual_wiki_event_pipeline_spark.sources.tables import CorpusTables
 
 
+def _n_files(bucket_dir):
+    return sum(f.endswith(".parquet") for f in os.listdir(bucket_dir))
+
+
 def _triples(df):
     return {
         (r.subj, r.pred, r.obj, r.obj_is_literal, r.lang, r.datatype)
@@ -215,3 +219,34 @@ def test_salted_triple_sink(spark, corpus_dir, store_dir, tmp_path):
     per_bucket = back.groupBy("bucket").count().collect()
     total = sum(r["count"] for r in per_bucket)
     assert max(r["count"] for r in per_bucket) < total
+    # the rebalance write puts each (small) bucket in one task: one file
+    assert {b: _n_files(os.path.join(out, b)) for b in buckets} == {
+        b: 1 for b in buckets}
+
+
+def test_salted_sink_splits_hot_bucket_by_measured_size(spark, tmp_path):
+    """One hot subject fills one bucket; once that bucket's shuffle
+    partition exceeds AQE's advisory size it is written by several tasks
+    (several files), and the rows read back losslessly."""
+    df = spark.range(0, 4000, numPartitions=4).select(
+        F.when(F.col("id") % 4 == 0,
+               F.concat(F.lit("s"), F.col("id").cast("string")))
+        .otherwise(F.lit("hot")).alias("subj"),
+        F.lit("p").alias("pred"),
+        F.concat(F.lit("o"), F.col("id").cast("string")).alias("obj"),
+    )
+    out = str(tmp_path / "hot")
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "8k")
+    try:
+        write_triples(df, out, n_buckets=8)
+    finally:
+        spark.conf.set(key, old)
+    back = spark.read.parquet(out)
+    hot = back.where(F.col("subj") == "hot").select("bucket").distinct()
+    (hot_bucket,) = [r.bucket for r in hot.collect()]
+    assert _n_files(os.path.join(out, f"bucket={hot_bucket}")) > 1
+    cols = ["subj", "pred", "obj"]
+    assert sorted(back.select(cols).collect()) == sorted(
+        df.select(cols).collect())

@@ -139,7 +139,7 @@ def aggregate(log_path: str, cpus: int,
             b["max_task_sec"] = max(b["max_task_sec"], run)
             ti = ev.get("Task Info") or {}
             for acc in ti.get("Accumulables", []):
-                if acc.get("Name") == "time to run python workers":
+                if acc.get("Name") == "time to run Python workers":
                     try:
                         b["python_sec"] += float(acc["Update"]) / 1e3
                     except (TypeError, ValueError):
