@@ -26,10 +26,15 @@ exists is refused.
 
 Scale notes: the query compiles to per-pattern filtered scans over the
 partitioned store + equi-joins (operators/bgp.py); constant predicates
-and subjects reach the parquet reader as pushed filters, and the
-bucket partitioning prunes subject-constant scans. --update writes its
-generation with `sinks.write_triples`, so an updated store keeps the
-same `bucket=` layout and the same pruning as the one it came from.
+and subjects reach the parquet reader as pushed filters. A constant
+subject also prunes to one `bucket=` directory: the store records its
+bucket count on `subj` (parquet footer metadata), and a pattern over a
+plain scan of the store adds `bucket = pmod(hash(<subject>), n)`, which
+Spark applies as a PartitionFilter (visible with --explain). --store is
+read as such a plain scan, so its constant-subject patterns are pruned;
+a frame built by union onto a store is not. --update writes its
+generation with `sinks.write_triples`, so an updated store keeps the `bucket=` layout,
+records its own bucket count, and prunes the same way.
 """
 
 from __future__ import annotations

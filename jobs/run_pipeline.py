@@ -18,7 +18,10 @@ Launch (north-star contract — multi-executor cluster, code shipped via
 Reads the corpus tables (Iceberg when --catalog is given, parquet-by-path
 otherwise), runs the full pipeline with every stage boundary materialized
 to the checkpoint store (resumable: a rerun after failure skips complete
-stages), and writes full + pilot triples salted-bucket-partitioned.
+stages), and writes full + pilot triples salted-bucket-partitioned. The
+bucket count is the session's spark.sql.shuffle.partitions (there is no
+flag for it); each store records it, and SPARQL over the store
+(jobs/query.py) prunes constant-subject patterns to one bucket by it.
 
 Local smoke (this sandbox): spark-submit --master local[8] works the same.
 """
@@ -37,7 +40,6 @@ def main(argv: list[str]) -> None:
     ap.add_argument("--catalog", default=None, help="Iceberg catalog.namespace for the corpus tables")
     ap.add_argument("--languages", default="en,nl,it")
     ap.add_argument("--max-pilot-incidents", type=int, default=None)
-    ap.add_argument("--salt-buckets", type=int, default=64)
     ap.add_argument("--seed-mode", default="by_incident",
                     choices=["by_incident", "by_participant"])
     ap.add_argument("--skew-report", action="store_true",
@@ -89,8 +91,8 @@ def main(argv: list[str]) -> None:
         store=store,
         seed_mode=args.seed_mode,
     )
-    write_triples(o.full_triples, f"{args.output}/full", n_buckets=args.salt_buckets)
-    write_triples(o.pilot_triples, f"{args.output}/pilot", n_buckets=args.salt_buckets)
+    write_triples(o.full_triples, f"{args.output}/full")
+    write_triples(o.pilot_triples, f"{args.output}/pilot")
     # NAF-side + analysis layers fold into ONE tagged write job (one
     # Catalyst analysis / schedule / commit instead of six) — per-layer row
     # counts come from the lineage footers, zero extra jobs.

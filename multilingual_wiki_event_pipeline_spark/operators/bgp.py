@@ -45,10 +45,17 @@ Semantics (SPARQL 1.1 BGP, bag semantics):
 Scale notes (100 TB): each pattern is one filtered scan of the triple
 table — predicate/object constants reach the parquet reader as
 PushedFilters, so a store partitioned (or z-ordered) by ``pred`` prunes to
-the touched predicates only. Joins are plain equi-joins on variable
+the touched predicates only. A constant subject over a store written by
+``sinks.write_triples``/``write_quads`` also prunes to one ``bucket=``
+directory: the store records its salt-bucket count ``n`` on ``subj``, and
+the pattern adds ``bucket = pmod(hash(<subject>), n)``, which Catalyst
+folds into a PartitionFilter. That predicate is added only when the
+pattern's input is a plain scan of such a store
+(``sinks.subject_bucket_filter``). Joins are plain equi-joins on variable
 columns: selective patterns (constant-rich) produce small sides that AQE
-broadcasts; nothing in the compilation is driver-side or per-row Python.
-Disconnected pattern groups are rejected rather than silently compiled to
+broadcasts; the pattern frames are not re-clustered (a 1-task scan joins
+as it is; AQE sizes the join's shuffle); nothing in the compilation is
+driver-side or per-row Python. Disconnected pattern groups are rejected rather than silently compiled to
 a cartesian product.
 """
 
@@ -56,6 +63,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..sinks import subject_bucket_filter
 
 TRIPLE_COLS = ("subj", "pred", "obj")
 GRAPH_COL = "g"
@@ -312,6 +321,10 @@ def _compile_pattern(triples: DataFrame,
     exactly as for a plain pattern. A predicate wrapped in ``<...>`` is a
     literal IRI — never path-interpreted (real IRIs contain ``/``) — with
     the brackets stripped before matching.
+
+    A constant subject over a plain store scan also filters
+    ``bucket = pmod(hash(<subject>), n)`` (``sinks.subject_bucket_filter``):
+    a partition filter that reads only that subject's bucket directory.
     """
     cols = TRIPLE_COLS + (GRAPH_COL,) if len(pattern) == 4 else TRIPLE_COLS
     if len(pattern) == 4:
@@ -345,6 +358,10 @@ def _compile_pattern(triples: DataFrame,
         elif p.startswith("<") and p.endswith(">"):
             pattern = (pattern[0], p[1:-1], pattern[2]) + pattern[3:]
     df = triples
+    if not is_var(pattern[0]):
+        pin = subject_bucket_filter(triples, pattern[0])
+        if pin is not None:
+            df = df.filter(pin)
     var_to_col: dict[str, str] = {}
     for term, col in zip(pattern, cols):
         if is_var(term):
@@ -378,21 +395,6 @@ def _join_group(triples: DataFrame,
     this refuses to compile.
     """
     compiled = [_compile_pattern(triples, p) for p in patterns]
-    # r6: with every pattern join broadcast, the STREAMING side of each
-    # join is a raw pattern scan — and a single-row-group local parquet
-    # gives every scan 1-4 tasks on 32 cores, so the whole solution-
-    # building chain ran at 4-way parallelism (measured 4.8 s for the
-    # 5-pattern required BGP emitting 974k solutions at sf1.0).
-    # Re-cluster each compiled (narrow, post-pushed-filter) pattern frame
-    # once, ONLY when the shared triple input's scan parallelism is below
-    # the session's shuffle parallelism: at cluster scale the scan
-    # already exceeds it and no exchange is added.
-    n_part = int(triples.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if len(compiled) > 1 and triples.rdd.getNumPartitions() < n_part:
-        compiled = [
-            (df.repartition(n_part, *[F.col(c) for c in sorted(pvars)]), pvars)
-            for df, pvars in compiled
-        ]
     result, bound = compiled[0]
     pending = list(range(1, len(compiled)))
     while pending:

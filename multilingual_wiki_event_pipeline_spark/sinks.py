@@ -27,6 +27,18 @@ one mega event type = one giant loop iteration). The write rebalances by
 bucket, so each bucket is one file; AQE splits a bucket across tasks (and
 files) only when its measured shuffle size exceeds the advisory partition
 size.
+
+The bucket count is a property of the store, not a constant: the writer
+takes ``n = spark.sql.shuffle.partitions`` of the writing session (so the
+directory and file count follows the cluster's parallelism, not a fixed
+fan-out) and records it as field metadata ``{"mwep.salt_buckets": n}``
+(``SALT_KEY``) on ``subj``, which parquet keeps in every file footer and
+``spark.read.parquet`` returns. A reader pins a constant subject to its
+one bucket, ``bucket = pmod(hash(subj), n)``, only when its input is a
+plain scan of such a store (:func:`subject_bucket_filter`, used by BGP
+matching in ``operators/bgp.py``): a frame that mixes in rows from
+elsewhere can keep the ``subj`` metadata while those rows carry no (or a
+different) bucket.
 """
 
 from __future__ import annotations
@@ -37,7 +49,7 @@ import time
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_SCHEMA = (
@@ -393,17 +405,73 @@ def layer_row_counts(store: CheckpointStore, stage: str) -> dict[str, int]:
 
 # -- final triple sink (K3) ---------------------------------------------------
 
-DEFAULT_SALT_BUCKETS = 64
+# field-metadata key on ``subj`` that records a store's salt-bucket count
+SALT_KEY = "mwep.salt_buckets"
 
 
-def write_triples(triples: DataFrame, path: str,
-                  n_buckets: int = DEFAULT_SALT_BUCKETS) -> None:
+def _bucket(subj: Column, n: int) -> Column:
+    return F.pmod(F.hash(subj), F.lit(n))
+
+
+def _salted(triples: DataFrame) -> DataFrame:
+    """``triples`` plus ``bucket = pmod(hash(subj), n)`` for the writing
+    session's ``n = spark.sql.shuffle.partitions``, with ``n`` recorded on
+    ``subj`` as field metadata ``{SALT_KEY: n}``."""
+    n = int(triples.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return triples.withColumn(
+        "bucket", _bucket(F.col("subj"), n)
+    ).withMetadata("subj", {SALT_KEY: n})
+
+
+def subject_bucket_filter(triples: DataFrame, subj: str) -> Column | None:
+    """``bucket = pmod(hash(subj), n)`` for the constant ``subj`` when
+    ``triples`` is a plain scan of a store written by :func:`write_triples`
+    or :func:`write_quads` (``n`` read from its ``subj`` metadata), else
+    None. Catalyst folds the predicate into a PartitionFilter, so the scan
+    reads one ``bucket=`` directory.
+
+    Plain scan, checked on the analyzed plan: only Project / Filter /
+    SubqueryAlias above one file relation partitioned by ``bucket``, with
+    ``subj`` and ``bucket`` still that relation's own attributes. Only then
+    does every row sit in its subject's bucket. Anything else may keep the
+    ``subj`` metadata while carrying rows from elsewhere: a
+    ``unionByName(..., allowMissingColumns=True)`` onto a store gives the
+    added rows ``bucket = NULL``, which the filter would drop."""
+    cols = triples.columns
+    if "subj" not in cols or "bucket" not in cols:
+        return None
+    n = triples.schema["subj"].metadata.get(SALT_KEY)
+    if not n:
+        return None
+    plan = triples._jdf.queryExecution().analyzed()
+    keep = {a for a in plan.output().mkString("\t").split("\t")
+            if a.startswith(("subj#", "bucket#"))}
+    while plan.nodeName() in ("Project", "Filter", "SubqueryAlias"):
+        plan = plan.child()
+    if (plan.nodeName() != "LogicalRelation"
+            or plan.relation().getClass().getSimpleName()
+            != "HadoopFsRelation"
+            or "bucket" not in plan.relation().partitionSchema().fieldNames()):
+        return None
+    leaf = set(plan.output().mkString("\t").split("\t"))
+    if len(keep) != 2 or not keep <= leaf:
+        return None
+    return F.col("bucket") == _bucket(F.lit(subj), int(n))
+
+
+def write_triples(triples: DataFrame, path: str) -> None:
     """Partitioned triple write, salted on the subject hash.
 
-    ``bucket = pmod(hash(subj), n_buckets)`` spreads hot subject RANGES
+    ``bucket = pmod(hash(subj), n)`` spreads hot subject RANGES
     (mega-conversation neighborhoods / hot incident types) across output
     partitions instead of partitioning by raw subject or incident_type,
     either of which recreates the reference's one-giant-iteration skew.
+    ``n`` is the writing session's ``spark.sql.shuffle.partitions``: the
+    store gets as many ``bucket=`` dirs as the session has write
+    parallelism, at most. ``n`` is recorded in the parquet footers as
+    ``subj`` field metadata ``{SALT_KEY: n}``; BGP matching uses it to
+    prune a constant-subject pattern to one bucket, but only over a plain
+    scan of the store (see the module docstring).
 
     The write goes through a ``rebalance`` hint on ``bucket``: AQE puts
     each bucket in one task and coalesces the small ones, so a bucket is
@@ -418,24 +486,22 @@ def write_triples(triples: DataFrame, path: str,
     On Iceberg this becomes a ``bucket(n, subj)`` partition transform
     with fanout writers — identical layout.
     """
-    salted = triples.withColumn(
-        "bucket", F.pmod(F.hash(F.col("subj")), F.lit(n_buckets))
-    )
-    salted.hint("rebalance", "bucket").write.mode("overwrite").partitionBy(
-        "bucket").parquet(path)
+    _salted(triples).hint("rebalance", "bucket").write.mode(
+        "overwrite").partitionBy("bucket").parquet(path)
 
 
-def write_quads(quads: DataFrame, path: str,
-                n_buckets: int = DEFAULT_SALT_BUCKETS) -> None:
+def write_quads(quads: DataFrame, path: str) -> None:
     """Partitioned QUAD-store write: ``partitionBy(g, bucket)`` — the
     graph name is the leading partition column, so a ``GRAPH <iri>`` /
     ``FROM`` equality predicate prunes to that graph's directories
     before any row is read (the quads module's whole point), and within
     each graph the subject-hash salting of :func:`write_triples`
-    applies unchanged. The ``rebalance`` hint is on ``(g, bucket)``:
-    one file per graph bucket, and a bucket is split across tasks only
-    when its measured shuffle size exceeds AQE's advisory partition
-    size (see :func:`write_triples`).
+    applies unchanged: the same session-sized ``n``, the same ``subj``
+    footer metadata, so a constant subject prunes to one bucket dir per
+    graph. The ``rebalance`` hint is on ``(g, bucket)``: one file per
+    graph bucket, and a bucket is split across tasks only when its
+    measured shuffle size exceeds AQE's advisory partition size (see
+    :func:`write_triples`).
 
     Contract: ``g`` must be LOW-CARDINALITY (collections, sources,
     snapshots — the reference's file-per-collection layout; thousands,
@@ -444,8 +510,5 @@ def write_quads(quads: DataFrame, path: str,
     write with :func:`write_triples` + a plain column instead. On
     Iceberg this becomes ``(identity(g), bucket(n, subj))`` partition
     transforms — identical pruning."""
-    salted = quads.withColumn(
-        "bucket", F.pmod(F.hash(F.col("subj")), F.lit(n_buckets))
-    )
-    salted.hint("rebalance", "g", "bucket").write.mode(
+    _salted(quads).hint("rebalance", "g", "bucket").write.mode(
         "overwrite").partitionBy("g", "bucket").parquet(path)

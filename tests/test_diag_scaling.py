@@ -22,3 +22,13 @@ def test_aggregate_reads_python_worker_time():
     agg = diag_scaling.aggregate(FIXTURE, cpus=4)
     assert sum(b["python_sec"] for b in agg.values()) == pytest.approx(0.12)
     assert sum(b["n_tasks"] for b in agg.values()) == 5
+
+
+def test_aggregate_maps_stages_to_job_groups_by_stage_ids():
+    """The fixture's job starts list their stages only under ``Stage IDs``
+    (``Stage Infos`` is empty); stages 0 and 1 belong to job group
+    ``r-1``, so its three tasks must land there, not in ``untagged``."""
+    agg = diag_scaling.aggregate(FIXTURE, cpus=4)
+    assert agg["r-1"]["n_tasks"] == 3
+    assert agg["r-1"]["n_stages"] == 2
+    assert agg["r-1"]["python_sec"] == pytest.approx(0.12)

@@ -12,7 +12,7 @@ import os
 import duckdb
 import pytest
 
-from multilingual_wiki_event_pipeline_spark.sinks import write_triples
+from multilingual_wiki_event_pipeline_spark.sinks import SALT_KEY, write_triples
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -39,7 +39,7 @@ def store_dir(spark, tmp_path_factory):
         rows, "subj string, pred string, obj string"
     )
     path = str(tmp_path_factory.mktemp("triples") / "store")
-    write_triples(df, path, n_buckets=2)
+    write_triples(df, path)
     return path
 
 
@@ -80,7 +80,7 @@ def test_ask_exit_codes(query_main, store_dir):
 
 
 def test_update_writes_new_store_never_in_place(
-        query_main, store_dir, tmp_path):
+        query_main, spark, store_dir, tmp_path):
     out = str(tmp_path / "store_v2")
     rc = query_main([
         "--store", store_dir,
@@ -102,6 +102,10 @@ def test_update_writes_new_store_never_in_place(
         ("e2", "sem:agent", "bob"),
         ("e3", "rdfs:label", "added"),
     ]
+    # the new generation records its salt-bucket count like any store
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert spark.read.parquet(out).schema["subj"].metadata == {
+        SALT_KEY: n}
     # original store untouched (immutability contract)
     orig = duckdb.sql(
         f"SELECT COUNT(*) FROM '{store_dir}/**/*.parquet'"
@@ -154,7 +158,7 @@ def test_quad_store_graph_query_end_to_end(query_main, spark, tmp_path,
         rows, "g string, subj string, pred string, obj string"
     )
     store = str(tmp_path / "quads")
-    write_quads(q, store, n_buckets=4)
+    write_quads(q, store)
     # partition layout: graph dirs first, bucket dirs inside
     gdirs = sorted(
         d for d in os.listdir(store) if d.startswith("g=")

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from multilingual_wiki_event_pipeline_spark.plans import pipeline
 from multilingual_wiki_event_pipeline_spark.sinks import (
+    SALT_KEY,
     CheckpointStore,
     layer_row_counts,
     write_layer_union,
@@ -206,16 +207,21 @@ def test_iceberg_catalog_branch(spark, tmp_path):
 
 def test_salted_triple_sink(spark, corpus_dir, store_dir, tmp_path):
     """write_triples spreads hot subjects across salted buckets and rereads
-    losslessly."""
+    losslessly; the bucket count is the session's shuffle partitions and
+    is recorded on ``subj`` in the store."""
     t = CorpusTables(spark, corpus_dir)
     o = pipeline.build(t, store=CheckpointStore(spark, store_dir))
     out = str(tmp_path / "triples_out")
-    write_triples(o.full_triples, out, n_buckets=8)
+    write_triples(o.full_triples, out)
     back = spark.read.parquet(out)
     assert _triples(back.drop("bucket")) == _triples(o.full_triples)
-    # bucket dirs exist and no single bucket holds everything
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert back.schema["subj"].metadata == {SALT_KEY: n}
+    # bucket dirs exist, at most n of them, and no single bucket holds
+    # everything
     buckets = [d for d in os.listdir(out) if d.startswith("bucket=")]
     assert len(buckets) > 1
+    assert {int(b.split("=")[1]) for b in buckets} <= set(range(n))
     per_bucket = back.groupBy("bucket").count().collect()
     total = sum(r["count"] for r in per_bucket)
     assert max(r["count"] for r in per_bucket) < total
@@ -240,7 +246,7 @@ def test_salted_sink_splits_hot_bucket_by_measured_size(spark, tmp_path):
     old = spark.conf.get(key)
     spark.conf.set(key, "8k")
     try:
-        write_triples(df, out, n_buckets=8)
+        write_triples(df, out)
     finally:
         spark.conf.set(key, old)
     back = spark.read.parquet(out)

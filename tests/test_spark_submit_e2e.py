@@ -51,7 +51,6 @@ def test_spark_submit_py_files_pipeline(corpus_dir, tmp_path):
         "--input", corpus_dir,
         "--checkpoint", str(ckpt),
         "--output", str(out),
-        "--salt-buckets", "4",
         "--skew-report",
     ]
     # scratch cwd + stripped PYTHONPATH: the zip is the only import route
@@ -73,6 +72,9 @@ def test_spark_submit_py_files_pipeline(corpus_dir, tmp_path):
         f"SELECT count(*) FROM '{out}/pilot/**/*.parquet'"
     ).fetchone()[0]
     assert n_full > 0 and n_pilot > 0
+    # the bucket count follows the session's shuffle partitions (8)
+    buckets = [d for d in os.listdir(out / "full") if d.startswith("bucket=")]
+    assert 1 < len(buckets) <= 8
     # the driver-side builder over the same corpus agrees on the triple set
     cols = con.sql(
         f"SELECT * FROM '{out}/full/**/*.parquet' LIMIT 1"

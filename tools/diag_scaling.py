@@ -112,8 +112,11 @@ def aggregate(log_path: str, cpus: int,
             jid = ev.get("Job ID")
             job_to_group[jid] = grp
             job_start_ms[jid] = ev.get("Submission Time", 0)
-            for si in ev.get("Stage Infos", []):
-                stage_to_group[si["Stage ID"]] = grp
+            # real logs carry both; a minimal log may carry only Stage IDs
+            sids = set(ev.get("Stage IDs", []))
+            sids.update(si["Stage ID"] for si in ev.get("Stage Infos", []))
+            for sid in sids:
+                stage_to_group[sid] = grp
         elif et == "SparkListenerJobEnd":
             jid = ev.get("Job ID")
             g = job_to_group.get(jid, "untagged")
