@@ -14,10 +14,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .operators import multimodal, similarity, text_analysis, text_dedup
+from .sources.tables import SF_SCHEMAS, read_parquet
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """The sf table ``name``, read with its declared schema
+    (``sources.tables.SF_SCHEMAS``): building a catalog entry's DataFrame
+    starts no schema-inference job, and a file that lacks a declared
+    column raises instead of reading NULLs."""
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet", SF_SCHEMAS[name])
 
 
 def _is_gyear(c) -> F.Column:

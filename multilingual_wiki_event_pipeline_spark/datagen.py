@@ -41,6 +41,7 @@ import urllib.parse
 from dataclasses import dataclass, field
 
 from .functions.text import TURN_SEPARATOR, offset_alignment_maps, tokenize
+from .sources.tables import CORPUS_SCHEMAS, ddl_columns
 
 LANGS = ["en", "nl", "it"]
 
@@ -135,15 +136,7 @@ def title_to_uri(title: str, lang: str, encode: bool = False) -> str:
 def generate(n_incidents: int = 30, seed: int = 42, mega_every: int = 25) -> Corpus:
     rng = random.Random(seed)
     c = Corpus(
-        tables={
-            name: []
-            for name in (
-                "transcripts conv_meta conv_sources incidents incident_direct_types "
-                "incident_roles role_mappings type2mapping entity_labels gazetteer "
-                "langlinks wd_sitelinks annotations srl_predicates srl_roles "
-                "ontology_edges"
-            ).split()
-        }
+        tables={name: [] for name in CORPUS_SCHEMAS}
     )
 
     # --- role mappings + type2mapping dimensions -------------------------
@@ -516,50 +509,25 @@ def _make_srl(rng, c: Corpus, conv_id: str, turn_texts: list[str], anns) -> None
 # Parquet writing
 # ---------------------------------------------------------------------------
 
-_SCHEMAS: dict[str, list[tuple[str, str]]] = {
-    "transcripts": [("conv_id", "string"), ("turn_idx", "int32"), ("role", "string"),
-                    ("text", "string"), ("tool", "string"), ("ts", "timestamp[us, tz=UTC]")],
-    "conv_meta": [("conv_id", "string"), ("incident_id", "string"), ("lang", "string"),
-                  ("name", "string"), ("uri", "string"),
-                  ("found_by", "list<string>")],
-    "conv_sources": [("conv_id", "string"), ("source", "string")],
-    "incidents": [("incident_id", "string"), ("incident_type", "string"),
-                  ("incident_type_uri", "string"), ("participant_id", "string"),
-                  ("participant_event_label", "string")],
-    "incident_direct_types": [("incident_id", "string"), ("direct_type", "string")],
-    "incident_roles": [("incident_id", "string"), ("role", "string"), ("value", "string")],
-    "role_mappings": [("mapping_name", "string"), ("role", "string"), ("prop_path", "string")],
-    "type2mapping": [("type_qid", "string"), ("mapping_name", "string")],
-    "entity_labels": [("qid", "string"), ("label", "string")],
-    "gazetteer": [("qid", "string"), ("lang", "string"), ("surface", "string"),
-                  ("uri", "string"), ("prior", "float64")],
-    "langlinks": [("lang", "string"), ("uri", "string"), ("other_lang", "string"),
-                  ("other_uri", "string")],
-    "wd_sitelinks": [("wiki_uri", "string"), ("wd_uri", "string"), ("lang", "string")],
-    "annotations": [("conv_id", "string"), ("surface_form", "string"), ("uri", "string"),
-                    ("offset", "int32")],
-    "srl_predicates": [("conv_id", "string"), ("pred_id", "string"), ("frame", "string"),
-                       ("begin_tid", "int32"), ("end_tid", "int32")],
-    "srl_roles": [("conv_id", "string"), ("pred_id", "string"), ("role", "string"),
-                  ("begin_tid", "int32"), ("end_tid", "int32")],
-    "ontology_edges": [("child", "string"), ("parent", "string")],
-}
-
-
 def write_parquet(corpus: Corpus, out_dir: str) -> None:
+    """One ``<table>.parquet`` file per corpus table, written with the
+    schema that ``CorpusTables`` declares when it reads the table back
+    (``sources.tables.CORPUS_SCHEMAS``)."""
+    import os
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    import os
-
+    arrow_types = {
+        "STRING": pa.string(), "INT": pa.int32(), "DOUBLE": pa.float64(),
+        "ARRAY<STRING>": pa.list_(pa.string()),
+        "TIMESTAMP": pa.timestamp("us", tz="UTC"),
+    }
     os.makedirs(out_dir, exist_ok=True)
-    for name, cols in _SCHEMAS.items():
+    for name, ddl in CORPUS_SCHEMAS.items():
         rows = corpus.tables[name]
-        schema = pa.schema([(col, getattr(pa, "string")() if typ == "string" else
-                             pa.int32() if typ == "int32" else
-                             pa.float64() if typ == "float64" else
-                             pa.list_(pa.string()) if typ == "list<string>" else
-                             pa.timestamp("us", tz="UTC")) for col, typ in cols])
+        cols = ddl_columns(ddl)
+        schema = pa.schema([(col, arrow_types[typ]) for col, typ in cols])
         arrays = {col: [r.get(col) for r in rows] for col, _ in cols}
         table = pa.Table.from_pydict(arrays, schema=schema)
         # small row groups keep the file splittable: Spark parallelizes a

@@ -81,10 +81,18 @@ def pilot_texts(texts: DataFrame, target_languages: list[str],
                 must_have_all_languages: bool = True,
                 must_have_english: bool = True,
                 one_page_per_language: bool = True,
-                min_chars: int = 100, max_chars: int = 50000) -> DataFrame:
+                min_chars: int = 100,
+                max_chars: int = 50000) -> tuple[DataFrame, DataFrame]:
     """A2 was already applied upstream (dedup is idempotent — the reference
     re-runs it at pilot_utils.py:139 as a no-op); apply F1 truncation, F2
-    filter, then the per-incident F3 language predicate."""
+    filter, then the per-incident F3 language predicate.
+
+    Returns ``(passing, keep)``: the truncated texts that pass F2, and the
+    ``incident_id`` of every incident whose passing texts satisfy F3. The
+    pilot texts are ``passing`` semi-joined to the selected incidents.
+    F3 and F4 are both per-incident predicates, so they commute: the
+    caller applies F4 to ``keep`` instead of to ``texts``, and the F4
+    chain is planned once, not once per consumer of the texts."""
     truncated = texts.withColumn("content", first_section_col(F.col("content")))
     passing = truncated.filter(
         ref_text_ok(F.col("content"), F.col("name"), min_chars, max_chars)
@@ -98,7 +106,7 @@ def pilot_texts(texts: DataFrame, target_languages: list[str],
             must_have_all_languages, must_have_english, one_page_per_language,
         )
     ).select("incident_id")
-    return passing.join(keep, "incident_id", "left_semi")
+    return passing, keep
 
 
 def backfill_role_labels(incident_roles: DataFrame, entity_labels: DataFrame) -> DataFrame:

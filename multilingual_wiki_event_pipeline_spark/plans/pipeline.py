@@ -145,9 +145,13 @@ def build(t: CorpusTables, target_languages: list[str] = None,
     inc_f4 = pilot.filter_missing_fes(
         incidents_full, roles_full, t.type2mapping, t.role_mappings
     )
-    texts_f4 = texts_full.join(inc_f4.select("incident_id"), "incident_id", "left_semi")
-    p_texts = pilot.pilot_texts(
-        texts_f4, target_languages, must_have_all_languages,
+    # F3 (language completeness) and F4 (role completeness) are both
+    # per-incident predicates, so they commute: F3 runs over every full
+    # text and F4 is applied once, to the incident ids that survive F3.
+    # Filtering the texts by F4 would put the F4 chain into every branch
+    # that reads them.
+    passing, keep_f3 = pilot.pilot_texts(
+        texts_full, target_languages, must_have_all_languages,
         must_have_english, one_page_per_language,
     )
     # cache, don't checkpoint: p_incidents is a small frame (<= one row per
@@ -158,11 +162,10 @@ def build(t: CorpusTables, target_languages: list[str] = None,
     # the 32-core pilot_triples wall, the dominant non-scaling slice of
     # out_layers (round-5 straggler probe).
     p_incidents = pilot.deterministic_pilot_limit(
-        inc_f4.join(p_texts.select("incident_id").distinct(), "incident_id", "left_semi"),
-        max_pilot_incidents,
+        inc_f4.join(keep_f3, "incident_id", "left_semi"), max_pilot_incidents,
     ).cache()
     p_texts = maybe_cache(
-        p_texts.join(p_incidents.select("incident_id"), "incident_id", "left_semi"),
+        passing.join(p_incidents.select("incident_id"), "incident_id", "left_semi"),
         "s02_pilot_texts",
     )
     # same reasoning: consumed by role_triples AND the SRL/coref chains.

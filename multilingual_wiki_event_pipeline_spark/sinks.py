@@ -51,6 +51,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 LINEAGE_SCHEMA = (
     "stage string, file string, n_rows long, n_bytes long, wall_sec double, "
@@ -127,14 +128,29 @@ class CheckpointStore:
     def materialize(self, df: DataFrame, stage: str,
                     partition_by: tuple[str, ...] = (),
                     compression: str | None = None) -> DataFrame:
-        if not self.is_complete(stage):
-            t0 = time.perf_counter()
-            self._write(df, stage, partition_by, compression)
-            if self.fingerprint and not self.catalog:
-                with open(self._manifest_path(stage), "w") as f:
-                    f.write(self.fingerprint)
-            self._record(stage, time.perf_counter() - t0)
-        return self._read(stage)
+        """Write ``df`` as ``stage`` unless it is already complete, and
+        return a scan of the stored boundary.
+
+        A boundary this call has just written is read back with the
+        written frame's schema (non-partition fields, then the
+        ``partition_by`` fields, the order a parquet scan puts them in),
+        so the read-back starts no schema-inference job. A resumed
+        boundary, written by an earlier run, is read with inference:
+        whatever schema it was written with is what the scan returns, so
+        a stale boundary fails downstream rather than being read through
+        the current code's schema."""
+        if self.is_complete(stage):
+            return self._read(stage)
+        t0 = time.perf_counter()
+        self._write(df, stage, partition_by, compression)
+        if self.fingerprint and not self.catalog:
+            with open(self._manifest_path(stage), "w") as f:
+                f.write(self.fingerprint)
+        self._record(stage, time.perf_counter() - t0)
+        schema = df.schema
+        return self._read(stage, StructType(
+            [f for f in schema if f.name not in partition_by]
+            + [schema[c] for c in partition_by]))
 
     def _write(self, df: DataFrame, stage: str,
                partition_by: tuple[str, ...],
@@ -164,10 +180,11 @@ class CheckpointStore:
             shutil.rmtree(final)
         os.rename(tmp, final)
 
-    def _read(self, stage: str) -> DataFrame:
+    def _read(self, stage: str, schema: StructType | None = None) -> DataFrame:
         if self.catalog:
             return self.spark.read.table(f"{self.catalog}.{stage}")
-        return self.spark.read.parquet(self._path(stage))
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self._path(stage))
 
     # -- lineage + counters (north rule) ------------------------------------
 
@@ -250,10 +267,12 @@ class CheckpointStore:
         )
 
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.root, "_lineage"))
+        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(
+            os.path.join(self.root, "_lineage"))
 
     def counters(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.root, "_counters"))
+        return self.spark.read.schema(COUNTER_SCHEMA).parquet(
+            os.path.join(self.root, "_counters"))
 
     def invalidate(self, stage: str) -> None:
         """Drop a boundary so the next run recomputes it (and everything

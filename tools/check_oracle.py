@@ -12,6 +12,7 @@ from __future__ import annotations
 import hashlib
 import math
 import sys
+import uuid
 
 import duckdb
 
@@ -48,11 +49,31 @@ def table_hash(rows: list[tuple], cols: list[str]) -> str:
     return h.hexdigest()[:16]
 
 
+def construction_jobs(spark, build):
+    """``(build(), n)``: the result of ``build()`` and the number of Spark
+    jobs started while it ran, counted under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"construct-{uuid.uuid4().hex}"
+    keys = ("spark.jobGroup.id", "spark.job.description",
+            "spark.job.interruptOnCancel")
+    prev = {k: sc.getLocalProperty(k) for k in keys}
+    sc.setJobGroup(group, "DataFrame construction")
+    try:
+        out = build()
+    finally:
+        for k, v in prev.items():
+            sc.setLocalProperty(k, v)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def run_checks(spark, only: set[str] | None = None,
-               sf_dir: str = SF_DIR, echo=print) -> list[str]:
+               sf_dir: str = SF_DIR, echo=print,
+               construct_jobs: dict[str, int] | None = None) -> list[str]:
     """Run every (or ``only`` the named) catalog query on Spark and its
     DuckDB oracle twin, compare, and return the list of failing names.
-    Importable so tests/test_catalog_oracle.py runs the full gate in CI."""
+    Importable so tests/test_catalog_oracle.py runs the full gate in CI.
+    ``construct_jobs``, when given, receives each entry's count of Spark
+    jobs started while its DataFrame was built (before any action)."""
     import os
     import sys as _sys
 
@@ -76,7 +97,9 @@ def run_checks(spark, only: set[str] | None = None,
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, sf_dir)
+            sdf, n_jobs = construction_jobs(spark, lambda: fn(spark, sf_dir))
+            if construct_jobs is not None:
+                construct_jobs[name] = n_jobs
             srows = [tuple(r) for r in sdf.collect()]
             scols = sdf.columns
         except Exception as ex:
