@@ -18,10 +18,13 @@ Launch (north-star contract — multi-executor cluster, code shipped via
 Reads the corpus tables (Iceberg when --catalog is given, parquet-by-path
 otherwise), runs the full pipeline with every stage boundary materialized
 to the checkpoint store (resumable: a rerun after failure skips complete
-stages), and writes full + pilot triples salted-bucket-partitioned. The
-bucket count is the session's spark.sql.shuffle.partitions (there is no
-flag for it); each store records it, and SPARQL over the store
-(jobs/query.py) prunes constant-subject patterns to one bucket by it.
+stages), and writes the outputs with pipeline.write_outputs: full + pilot
+triples salted-bucket-partitioned under --output, the six NAF-side and
+analysis layers as one tagged checkpoint stage, and a sink counter per
+output. The bucket count is the session's spark.sql.shuffle.partitions
+(there is no flag for it); each store records it, and SPARQL over the
+store (jobs/query.py) prunes constant-subject patterns to one bucket by
+it.
 
 Local smoke (this sandbox): spark-submit --master local[8] works the same.
 """
@@ -54,12 +57,7 @@ def main(argv: list[str]) -> None:
     from pyspark.sql import SparkSession
 
     from multilingual_wiki_event_pipeline_spark.plans import pipeline
-    from multilingual_wiki_event_pipeline_spark.sinks import (
-        CheckpointStore,
-        layer_row_counts,
-        write_layer_union,
-        write_triples,
-    )
+    from multilingual_wiki_event_pipeline_spark.sinks import CheckpointStore
     from multilingual_wiki_event_pipeline_spark.sources.tables import CorpusTables
 
     spark = SparkSession.builder.appName("mwep-kg-pipeline").getOrCreate()
@@ -91,24 +89,7 @@ def main(argv: list[str]) -> None:
         store=store,
         seed_mode=args.seed_mode,
     )
-    write_triples(o.full_triples, f"{args.output}/full")
-    write_triples(o.pilot_triples, f"{args.output}/pilot")
-    # NAF-side + analysis layers fold into ONE tagged write job (one
-    # Catalyst analysis / schedule / commit instead of six) — per-layer row
-    # counts come from the lineage footers, zero extra jobs.
-    layers = {
-        "mentions": o.mentions,
-        "corefs": o.corefs,
-        "srl_links": o.srl_links,
-        "gazetteer_links": o.gazetteer_links,
-        "type_index": o.type_index,
-        "incident_ancestors": o.incident_ancestors,
-    }
-    write_layer_union(store, layers, "out_layers")
-    for layer, n in layer_row_counts(store, "out_layers").items():
-        store.add_counter("sink", layer, n)
-    store.add_counter("sink", "full_triples", o.full_triples.count())
-    store.add_counter("sink", "pilot_triples", o.pilot_triples.count())
+    pipeline.write_outputs(o, store, args.output)
 
     # optional: the skew report the north-rule partitioning strategy is
     # tuned against — mega-conversations (turns-per-conv p50/p90/p99, a

@@ -155,8 +155,7 @@ def j10_transitive_closure(spark, sf_dir):
     """J10 (utils.py:489-569): ontology ancestor closure — iterative
     self-join to fixpoint (recursive-CTE equivalent), delegated to the ONE
     closure implementation (operators/ontology.ancestor_closure: equi-join
-    rounds, localCheckpoint lineage hygiene, counts only at checkpoints,
-    -1 sentinel). This entry's contract is proper ancestors only, so it
+    rounds unrolled in one lazy plan). This entry's contract is proper ancestors only, so it
     passes ``reflexive=False`` (edge-seeded iteration — sound because the
     edge table is acyclic: nation -> region -> root) instead of building
     the reflexive closure and filtering ``node != ancestor`` after, which
@@ -192,8 +191,8 @@ def j10_incident_ancestors(spark, sf_dir):
     """S3+J10 wired end-to-end (utils.py:555-569 update_incident): a
     subclass tree is derived from the event types (type -> md5-bucketed
     category -> root), the ancestor closure runs through
-    operators/ontology.ancestor_closure (iterative equi-join, localCheckpoint
-    hygiene), and each incident's direct types expand to their root-path
+    operators/ontology.ancestor_closure (iterative equi-join, unrolled in
+    one lazy plan), and each incident's direct types expand to their root-path
     ancestors. Closure is dimension-sized; the only fact-sized step is one
     broadcast join. Oracle = recursive CTE."""
     from .operators import ontology

@@ -56,8 +56,7 @@ def token_table(texts: DataFrame) -> DataFrame:
     return texts.select("conv_id", "content").mapInPandas(kernel, TOKENS_SCHEMA)
 
 
-def align_mentions(texts: DataFrame, annotations: DataFrame,
-                   kernel_partitions: int | str | None = None) -> DataFrame:
+def align_mentions(texts: DataFrame, annotations: DataFrame) -> DataFrame:
     """J6/U2/F10: align annotation char offsets to token boundaries over the
     (pilot-truncated) content; misaligned mentions are skipped
     (pilot_utils.py:297-306). Returns one row per aligned mention with the
@@ -68,17 +67,9 @@ def align_mentions(texts: DataFrame, annotations: DataFrame,
     document is by char offset — the reference's dict keyed by (start, end)
     keeps the *last* annotation per span, reproduced here.
 
-    ``kernel_partitions`` optionally repartitions the texts side BEFORE
-    the join (explicit numPartitions exempts the exchange from AQE
-    coalescing; ``"auto"`` = 8x defaultParallelism). Default ``None``: the
-    round-5 1v4 scaling adjudication A/B'd this knob at the 120k-incident
-    corpus and the default shuffle grain WON at both levels — the stage in
-    isolation already scales at 0.99 efficiency 1->4 cores (151.2 s ->
-    38.2 s), and the extra exchange cost more than any grain win (auto:
-    158.8 / 50.3 s = 0.79). The stage's poor in-pipeline scaling was a
-    run-context effect, not task grain — see BENCH/scaling_diag_30k.md.
-    Per-row results are partitioning-independent either way (each row is
-    one self-contained document).
+    The kernel runs at the join's own shuffle grain: repartitioning the
+    texts first was measured, and the extra exchange cost more than the
+    finer grain won (BENCH/scaling_diag_30k.md).
     """
     packed = annotations.groupBy("conv_id").agg(
         F.sort_array(
@@ -86,12 +77,6 @@ def align_mentions(texts: DataFrame, annotations: DataFrame,
         ).alias("anns")
     )
     texts = texts.select("conv_id", "lang", "content")
-    if kernel_partitions == "auto":
-        kernel_partitions = (
-            texts.sparkSession.sparkContext.defaultParallelism * 8
-        )
-    if kernel_partitions:
-        texts = texts.repartition(kernel_partitions, "conv_id")
     joined = texts.join(packed, "conv_id")
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

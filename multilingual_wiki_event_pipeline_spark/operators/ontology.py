@@ -8,12 +8,11 @@ instance-of values to every node on a root→type path; the ``subsumed_by``
 event-type matching mode (utils.py:117-118) matches an incident to a
 collection type through exactly this closure.
 
-Spark-first: the closure is an iterative equi-join to fixpoint over the
+Spark-first: the closure is an iterative equi-join over the
 ``ontology_edges(child, parent)`` table (the DataFrame form of a recursive
-CTE) with the same hygiene as canonicalize.connected_components —
-``localCheckpoint`` every ``check_every`` rounds truncates lineage, and the
-convergence count runs only at checkpoints. Wikidata's subclass DAG is
-≤ ~20 deep, so ≤ 7 checkpointed rounds at the default cadence.
+CTE), unrolled for a fixed ``max_depth`` rounds in one lazy plan: no
+checkpoint and no convergence count, so building it starts no Spark job.
+Wikidata's subclass DAG is ≤ ~20 deep, the default round count.
 """
 
 from __future__ import annotations
@@ -25,7 +24,6 @@ EVENT_ROOT = "wd:Q1656682"  # reference utils.py:557 top node
 
 
 def ancestor_closure(edges: DataFrame, max_depth: int = 20,
-                     check_every: int = 3,
                      reflexive: bool = True) -> DataFrame:
     """edges(child, parent) -> (node, ancestor), transitive; reflexive
     (node itself included) by default — ``update_incident`` wants the type
@@ -55,9 +53,7 @@ def ancestor_closure(edges: DataFrame, max_depth: int = 20,
     # rounds). All ``max_depth`` rounds now run as ONE job of tiny
     # broadcast-join + distinct stages — no checkpoint or count jobs at
     # all; rounds past the fixpoint are no-ops (distinct absorbs them),
-    # so dropping the early-exit cannot change the result. ``check_every``
-    # is retained for API compatibility and ignored.
-    del check_every
+    # so dropping the early-exit cannot change the result.
     for i in range(max_depth):
         anc = (
             anc.join(edges, anc.ancestor == edges.child, "left")

@@ -133,18 +133,6 @@ def rp_bucket(v: Column, weights: list[list[float]]) -> Column:
     return bucket.cast("long")
 
 
-def sign_bucket(v: Column, n_bits: int = 8) -> Column:
-    """Axis-hyperplane variant (pack sign bits of the first ``n_bits``
-    dims). Kept for A/B comparison against ``rp_bucket``; the catalog
-    defaults use seeded random projections since round 4."""
-    bucket = F.lit(0)
-    for i in range(n_bits):
-        bucket = bucket + F.when(
-            F.element_at(v, i + 1) > 0, F.lit(1 << i)
-        ).otherwise(F.lit(0))
-    return bucket.cast("long")
-
-
 def lsh_bucketed_topk(
     embeddings: DataFrame, k: int = 3, query_pred: Column | None = None,
     n_bits: int = DEFAULT_LSH_BITS, dim: int = DEFAULT_DIM,
@@ -406,7 +394,7 @@ def kmeans_centroids(embeddings: DataFrame, k: int = 16,
     its members keeps its previous centroid (left-anti union) instead of
     collapsing, so k stays constant. Centroids are dimension-sized:
     ``localCheckpoint`` per round truncates the growing iteration lineage,
-    exactly like ontology.ancestor_closure / connected_components.
+    exactly like connected_components.
 
     At 10^9 vectors each round costs one broadcast-join pass + one
     (cell, pos)-keyed aggregation — no vector-table shuffle, no driver

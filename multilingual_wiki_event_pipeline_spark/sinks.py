@@ -126,8 +126,7 @@ class CheckpointStore:
             return f.read().strip() == self.fingerprint
 
     def materialize(self, df: DataFrame, stage: str,
-                    partition_by: tuple[str, ...] = (),
-                    compression: str | None = None) -> DataFrame:
+                    partition_by: tuple[str, ...] = ()) -> DataFrame:
         """Write ``df`` as ``stage`` unless it is already complete, and
         return a scan of the stored boundary.
 
@@ -142,7 +141,7 @@ class CheckpointStore:
         if self.is_complete(stage):
             return self._read(stage)
         t0 = time.perf_counter()
-        self._write(df, stage, partition_by, compression)
+        self._write(df, stage, partition_by)
         if self.fingerprint and not self.catalog:
             with open(self._manifest_path(stage), "w") as f:
                 f.write(self.fingerprint)
@@ -153,14 +152,11 @@ class CheckpointStore:
             + [schema[c] for c in partition_by]))
 
     def _write(self, df: DataFrame, stage: str,
-               partition_by: tuple[str, ...],
-               compression: str | None = None) -> None:
+               partition_by: tuple[str, ...]) -> None:
         if self.catalog:
             w = df.writeTo(f"{self.catalog}.{stage}")
             if self.fingerprint:
                 w = w.tableProperty("mwep.fingerprint", self.fingerprint)
-            if compression:
-                w = w.tableProperty("write.parquet.compression-codec", compression)
             if partition_by:
                 w = w.partitionedBy(*[F.col(c) for c in partition_by])
             w.createOrReplace()
@@ -171,8 +167,6 @@ class CheckpointStore:
         final = self._path(stage)
         tmp = final + f".__tmp_{self.run_id}"
         w = df.write.mode("overwrite")
-        if compression:
-            w = w.option("compression", compression)
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(tmp)
@@ -196,17 +190,7 @@ class CheckpointStore:
             out = self._read(stage)
             rows = [(stage, f"{self.catalog}.{stage}", out.count(), None)]
         else:
-            import pyarrow.parquet as pq
-
-            rows = []
-            base = self._path(stage)
-            for dirpath, _dirs, files in os.walk(base):
-                for fn in files:
-                    if not fn.endswith(".parquet"):
-                        continue
-                    p = os.path.join(dirpath, fn)
-                    md = pq.ParquetFile(p).metadata
-                    rows.append((stage, p, md.num_rows, os.path.getsize(p)))
+            rows = [(stage, *f) for f in _parquet_footers(self._path(stage))]
         self._append_rows(
             "_lineage",
             [
@@ -285,9 +269,33 @@ class CheckpointStore:
             shutil.rmtree(p)
 
 
+def _parquet_footers(path: str) -> list[tuple[str, int, int]]:
+    """(file, rows, bytes) of every parquet file under the local directory
+    ``path``, read from the file footers on the driver."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for dirpath, _dirs, files in os.walk(path):
+        for fn in files:
+            if fn.endswith(".parquet"):
+                p = os.path.join(dirpath, fn)
+                out.append((p, pq.ParquetFile(p).metadata.num_rows,
+                            os.path.getsize(p)))
+    return out
+
+
+def stored_row_count(spark: SparkSession, path: str) -> int:
+    """Rows of the parquet data written at ``path``. A local directory is
+    summed from its file footers on the driver, with no Spark job; any
+    other location (an object-store or ``file:`` URI) costs one Spark
+    count."""
+    if os.path.isdir(path):
+        return sum(n for _, n, _ in _parquet_footers(path))
+    return spark.read.parquet(path).count()
+
+
 def write_layer_union(store: CheckpointStore, layers: dict[str, DataFrame],
-                      stage: str, payload: str = "typed",
-                      compression: str | None = None) -> DataFrame:
+                      stage: str) -> DataFrame:
     """Fold independent output layers into ONE tagged write job.
 
     Every extra Spark action pays a serial floor (Catalyst analysis, job
@@ -298,91 +306,54 @@ def write_layer_union(store: CheckpointStore, layers: dict[str, DataFrame],
     single floor. Per-layer row counts come for free from the parquet
     footers via ``layer_row_counts`` (partition dirs carry ``layer=``).
 
-    ``payload`` picks the union representation. BOTH sides of the trade
-    are measured (BENCH/payload_ab_8core.md + scaling tables):
-
-    - ``"typed"`` (DEFAULT since round 4): a nullable SUPERSCHEMA — every
-      layer keeps its native columns, missing ones null-filled by
-      ``unionByName(allowMissingColumns=True)``; a column name claimed by
-      an earlier layer with a different type is layer-qualified
-      (``name__layer``). Default because it wins every measured axis:
-      (1) SCALING — the typed full-pipeline 1→4-core run measured
-      efficiency 0.849 (5 reps/level, 15.1 M turns) where json's runs
-      measured 0.691/contaminated (BENCH/scaling_1v4.json); (2) READERS —
-      stored layers keep column pruning and predicate pushdown, which a
-      JSON blob forfeits; (3) WRITE COST — none: the round-4
-      contamination-metered A/B measured the payload-touched stage at
-      parity (typed 29.3 s vs json 29.7 s out_layers at 8 cores;
-      round 3's "typed writes 4.6× slower" was host noise — its clean
-      re-measurement collapsed 135.5 s to 29.3 s, see
-      BENCH/payload_ab_8core.md).
-    - ``"json"``: (layer, to_json(struct)) — one 2-column schema
-      regardless of layers, re-parsed by readers via
-      ``from_json(payload, schema)``. No longer claimed as a wall-clock
-      winner (that round-3 reading did not survive noise-controlled
-      re-measurement); kept for sinks that want a fixed 2-column schema
-      across heterogeneous layer sets.
-
-    ``compression`` overrides the session parquet codec for this stage
-    (e.g. ``"snappy"`` or ``"lz4"`` when write CPU, not storage, is the
-    binding resource).
+    The union is a nullable SUPERSCHEMA: every layer keeps its native
+    columns, missing ones null-filled by
+    ``unionByName(allowMissingColumns=True)``; a column name claimed by an
+    earlier layer with a different type is layer-qualified
+    (``name__layer``). Typed columns, not one serialized blob per row, so
+    readers of a stored layer keep column pruning and predicate pushdown.
     """
-    if payload == "typed":
-        seen_types: dict[str, str] = {}
-        emitted: set[str] = set()
-        qualified: set[str] = set()
-        parts = []
-        for name, df in layers.items():
-            sel = []
-            for f in df.schema.fields:
-                # up-front schema validation (ADVICE r3): a layer column
-                # named like the tag column, or colliding with a qualified
-                # alias another layer already claimed, would make the union
-                # ambiguous — fail loudly before building it.
-                if f.name == "layer":
-                    raise ValueError(
-                        f"layer {name!r} has a column named 'layer', which "
-                        "collides with the union's tag column"
-                    )
-                t = f.dataType.simpleString()
-                out_name = f.name
-                if seen_types.get(f.name, t) != t:
-                    out_name = f"{f.name}__{name}"
-                else:
-                    seen_types[f.name] = t
-                collides = (
-                    (out_name != f.name and out_name in emitted)
-                    or (out_name == f.name and out_name in qualified)
+    seen_types: dict[str, str] = {}
+    emitted: set[str] = set()
+    qualified: set[str] = set()
+    parts = []
+    for name, df in layers.items():
+        sel = []
+        for f in df.schema.fields:
+            # up-front schema validation (ADVICE r3): a layer column named
+            # like the tag column, or colliding with a qualified alias
+            # another layer already claimed, would make the union
+            # ambiguous — fail loudly before building it.
+            if f.name == "layer":
+                raise ValueError(
+                    f"layer {name!r} has a column named 'layer', which "
+                    "collides with the union's tag column"
                 )
-                if collides:
-                    raise ValueError(
-                        f"layer {name!r} column {f.name!r} maps to "
-                        f"{out_name!r}, which collides with a column "
-                        "another layer already emits under that name"
-                    )
-                emitted.add(out_name)
-                if out_name != f.name:
-                    qualified.add(out_name)
-                sel.append(F.col(f.name).alias(out_name))
-            parts.append(df.select(F.lit(name).alias("layer"), *sel))
-        union = parts[0]
-        for p in parts[1:]:
-            union = union.unionByName(p, allowMissingColumns=True)
-    elif payload == "json":
-        parts = [
-            df.select(
-                F.lit(name).alias("layer"),
-                F.to_json(F.struct(*df.columns)).alias("payload"),
+            t = f.dataType.simpleString()
+            out_name = f.name
+            if seen_types.get(f.name, t) != t:
+                out_name = f"{f.name}__{name}"
+            else:
+                seen_types[f.name] = t
+            collides = (
+                (out_name != f.name and out_name in emitted)
+                or (out_name == f.name and out_name in qualified)
             )
-            for name, df in layers.items()
-        ]
-        union = parts[0]
-        for p in parts[1:]:
-            union = union.unionByName(p)
-    else:
-        raise ValueError(f"unknown payload mode {payload!r}")
-    return store.materialize(union, stage, partition_by=("layer",),
-                             compression=compression)
+            if collides:
+                raise ValueError(
+                    f"layer {name!r} column {f.name!r} maps to "
+                    f"{out_name!r}, which collides with a column "
+                    "another layer already emits under that name"
+                )
+            emitted.add(out_name)
+            if out_name != f.name:
+                qualified.add(out_name)
+            sel.append(F.col(f.name).alias(out_name))
+        parts.append(df.select(F.lit(name).alias("layer"), *sel))
+    union = parts[0]
+    for p in parts[1:]:
+        union = union.unionByName(p, allowMissingColumns=True)
+    return store.materialize(union, stage, partition_by=("layer",))
 
 
 def layer_row_counts(store: CheckpointStore, stage: str) -> dict[str, int]:

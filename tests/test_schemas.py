@@ -133,7 +133,9 @@ def test_corpus_tables_and_pipeline_build_start_no_jobs(spark, corpus_dir):
         t = CorpusTables(spark, corpus_dir)
         for name in TABLE_NAMES:
             t.table(name)
-        return pipeline.build(t)
+        o = pipeline.build(t)
+        o.incident_ancestors  # the deferred closure plan: built, not run
+        return o
 
     _, n = construction_jobs(spark, build)
     assert n == 0

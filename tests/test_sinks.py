@@ -5,19 +5,29 @@ lineage/counters, and the salted triple sink (north rule; SURVEY §7.1 M5).
 from __future__ import annotations
 
 import os
+import sys
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from multilingual_wiki_event_pipeline_spark.plans import pipeline
-from multilingual_wiki_event_pipeline_spark.sinks import (
+sys.path.insert(0, os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+
+from check_oracle import construction_jobs  # noqa: E402
+
+from multilingual_wiki_event_pipeline_spark.plans import pipeline  # noqa: E402
+from multilingual_wiki_event_pipeline_spark.sinks import (  # noqa: E402
     SALT_KEY,
     CheckpointStore,
     layer_row_counts,
+    stored_row_count,
     write_layer_union,
     write_triples,
 )
-from multilingual_wiki_event_pipeline_spark.sources.tables import CorpusTables
+from multilingual_wiki_event_pipeline_spark.sources.tables import (  # noqa: E402
+    CorpusTables,
+)
 
 
 def _n_files(bucket_dir):
@@ -103,9 +113,8 @@ def test_counters_roundtrip(spark, store_dir):
 
 
 def test_layer_union_typed_superschema_roundtrip(spark, tmp_path):
-    """write_layer_union's typed superschema mode — exercised via the
-    DEFAULT payload (typed IS the shipped default; this test pins that) —
-    folds N layers into one tagged write under a nullable superschema:
+    """write_layer_union folds N layers into one tagged write under a
+    nullable superschema:
     shared same-type columns merge, a name reused with a different type is
     layer-qualified, missing columns null-fill, and per-layer counts come
     from lineage."""
@@ -128,20 +137,6 @@ def test_layer_union_typed_superschema_roundtrip(spark, tmp_path):
     assert {r.y__c for r in out.filter(F.col("layer") == "c").collect()} == {"0", "1"}
     # resume: a fresh handle sees the stage complete
     assert CheckpointStore(spark, store.root).is_complete("out_layers")
-
-
-def test_layer_union_json_mode(spark, tmp_path):
-    """The JSON payload representation (the single-JVM wall knob; typed is
-    the shipped default) round-trips through from_json."""
-    store = CheckpointStore(spark, str(tmp_path / "ckpt_lu_json"))
-    a = spark.range(4).select(F.col("id").alias("x"))
-    out = write_layer_union(store, {"a": a}, "out_layers", payload="json",
-                            compression="snappy")
-    assert set(out.columns) == {"layer", "payload"}
-    back = (
-        out.select(F.from_json("payload", "x long").alias("r")).select("r.*")
-    )
-    assert {r.x for r in back.collect()} == set(range(4))
 
 
 def test_manifest_invalidates_on_param_change(spark, tmp_path):
@@ -228,6 +223,52 @@ def test_salted_triple_sink(spark, corpus_dir, store_dir, tmp_path):
     # the rebalance write puts each (small) bucket in one task: one file
     assert {b: _n_files(os.path.join(out, b)) for b in buckets} == {
         b: 1 for b in buckets}
+
+
+def test_write_outputs_writes_the_shipped_sequence(spark, corpus_dir,
+                                                  store_dir, tmp_path):
+    """pipeline.write_outputs writes the six output layers into
+    ``out_layers``, the full and pilot triples as bucketed stores, and one
+    sink counter per output equal to what DuckDB counts in the written
+    files; the triple counts are read from footers, with no Spark job."""
+    store = CheckpointStore(spark, store_dir)
+    o = pipeline.build(CorpusTables(spark, corpus_dir), store=store)
+    out = str(tmp_path / "out")
+    counts = pipeline.write_outputs(o, store, out)
+
+    layers = {"mentions", "corefs", "srl_links", "gazetteer_links",
+              "type_index", "incident_ancestors"}
+    layer_dirs = {d.split("=", 1)[1]
+                  for d in os.listdir(os.path.join(store_dir, "out_layers"))
+                  if d.startswith("layer=")}
+    assert layer_dirs == layers
+    assert set(counts) == layers | {"full_triples", "pilot_triples"}
+
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for which in ("full", "pilot"):
+        back = spark.read.parquet(os.path.join(out, which))
+        assert back.schema["subj"].metadata == {SALT_KEY: n}
+        assert any(d.startswith("bucket=")
+                   for d in os.listdir(os.path.join(out, which)))
+
+    con = duckdb.connect()
+    want = dict(con.sql(
+        "SELECT layer, count(*) FROM read_parquet("
+        f"'{store_dir}/out_layers/*/*.parquet', hive_partitioning = true) "
+        "GROUP BY layer").fetchall())
+    for which in ("full", "pilot"):
+        want[f"{which}_triples"] = con.sql(
+            f"SELECT count(*) FROM '{out}/{which}/*/*.parquet'").fetchone()[0]
+    assert counts == want
+    recorded = store.counters().filter(
+        (F.col("stage") == "sink") & (F.col("run_id") == store.run_id))
+    assert {r.metric: int(r.value) for r in recorded.collect()} == want
+
+    full = os.path.join(out, "full")
+    assert construction_jobs(spark, lambda: stored_row_count(spark, full)) == (
+        want["full_triples"], 0)
+    # a location that is not a local directory is counted by Spark
+    assert stored_row_count(spark, "file://" + full) == want["full_triples"]
 
 
 def test_salted_sink_splits_hot_bucket_by_measured_size(spark, tmp_path):

@@ -1,7 +1,12 @@
 """Subprocess worker for tools/bench_scaling.py: runs the full KG pipeline
 once at a given parallelism level and prints one JSON line with wall time,
-turns/sec, and per-stage timings (mirroring the reference's stage CSV,
-main.py:498-500).
+turns/sec, per-output row counts and per-stage timings (mirroring the
+reference's stage CSV, main.py:498-500).
+
+The timed work is the shipped write sequence, ``pipeline.build`` with a
+checkpoint store followed by ``pipeline.write_outputs`` (the same calls as
+jobs/run_pipeline.py): the full and pilot triple stores, then the six
+output layers as one tagged write.
 
 Usage: python tools/_scaling_worker.py <level> <corpus_dir>
 
@@ -117,39 +122,8 @@ def main() -> None:
         t0 = time.perf_counter()
         store = CheckpointStore(spark, ckpt)
         o = pipeline.build(t, store=store)
-        # materialize every pipeline output (the real workload is writes,
-        # not driver-side counts). The five outputs fold into ONE tagged
-        # write job (sinks.write_layer_union): one Catalyst analysis, one
-        # job schedule, one commit — instead of five serial floors that
-        # do not shrink with cores. Row counts come from the recorded
-        # lineage footers afterwards — zero extra jobs.
-        from multilingual_wiki_event_pipeline_spark.sinks import (
-            layer_row_counts,
-            write_layer_union,
-        )
-
-        outs = {
-            "mentions": o.mentions,
-            "full_triples": o.full_triples,
-            "pilot_triples": o.pilot_triples,
-            "corefs": o.corefs,
-            "srl_links": o.srl_links,
-        }
-        # A/B knobs for the output representation: MWEP_PAYLOAD overrides;
-        # unset means MEASURE THE SHIPPED DEFAULT (write_layer_union's own
-        # default), so the scaling evidence always tracks the config users
-        # actually get (round-3 verdict item 1).
-        import inspect
-
-        default_payload = inspect.signature(
-            write_layer_union
-        ).parameters["payload"].default
-        payload = os.environ.get("MWEP_PAYLOAD", default_payload)
-        codec = os.environ.get("MWEP_CODEC") or None
-        write_layer_union(store, outs, "out_layers", payload=payload,
-                          compression=codec)
+        counts = pipeline.write_outputs(o, store, os.path.join(ckpt, "out"))
         wall = time.perf_counter() - t0
-        counts = layer_row_counts(store, "out_layers")
         import pyarrow.parquet as pq
 
         stage_wall: dict[str, float] = {}
@@ -167,8 +141,6 @@ def main() -> None:
         "n_turns": n_turns,
         "wall_sec": round(wall, 2),
         "turns_per_sec": round(n_turns / wall, 1),
-        "payload": payload,
-        "codec": codec or "session-default",
         "counts": counts,
         "stage_wall_sec": stage_wall,
     }))

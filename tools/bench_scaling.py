@@ -1,11 +1,16 @@
 """Two-parallelism scaling benchmark (north rule's N vs 4N executors,
 sandbox proxy: same job, same input, separate JVMs at local[N] / local[4N]).
 
+The job is the shipped write sequence (tools/_scaling_worker.py):
+``pipeline.build`` with a checkpoint store, then ``pipeline.write_outputs``
+— the full and pilot triple stores and the six output layers in one
+tagged write, as jobs/run_pipeline.py runs them.
+
 Writes BENCH/scaling_{A}v{B}.md (human table + confs + per-stage timings)
 and BENCH/scaling_{A}v{B}.json (machine-readable).
 
 Usage: python tools/bench_scaling.py [n_incidents] [--levels N,4N]
-           [--reps R] [--payload json|typed] [--corpus-dir DIR]
+           [--reps R] [--corpus-dir DIR]
 
 Noise-hardened protocol (round-3 verdict: the sandbox host shows 1.5-5x
 one-sided run-to-run noise, which drowned both the PASS and the MISS it was
@@ -58,22 +63,19 @@ from sentinel import (  # noqa: E402
 )
 
 
-def run_rep(cpus: int, corpus_dir: str, payload: str | None,
-            floor: float, bw_floor: float) -> dict:
+def run_rep(cpus: int, corpus_dir: str, floor: float,
+            bw_floor: float) -> dict:
     """One worker subprocess under sentinel sampling. The CPU sentinel
     samples every ~20 s mid-rep; the memory-bandwidth sentinel samples at
     the rep's boundaries (job quiescent — see sentinel.py), and a rep is
     accepted only if BOTH are clean."""
     subprocess.run(["sync"], check=False)  # level the page-cache field
-    env = dict(os.environ)
-    if payload:
-        env["MWEP_PAYLOAD"] = payload
     bw0 = bandwidth_wall()
     with SentinelSampler() as sampler:
         proc = subprocess.run(
             [sys.executable, os.path.join(REPO, "tools", "_scaling_worker.py"),
              str(cpus), corpus_dir],
-            capture_output=True, text=True, timeout=7200, env=env,
+            capture_output=True, text=True, timeout=7200,
         )
     bw1 = bandwidth_wall()
     if proc.returncode != 0:
@@ -122,9 +124,6 @@ def main() -> None:
                     help="accepted reps wanted per level")
     ap.add_argument("--max-attempts", type=int, default=None,
                     help="attempt cap per level (default reps+2)")
-    ap.add_argument("--payload", default=None,
-                    help="MWEP_PAYLOAD for the worker (json|typed); "
-                         "default: worker default")
     ap.add_argument("--corpus-dir", default=None,
                     help="reuse a pre-generated corpus (kept afterwards); "
                          "generated there if the dir has no transcripts yet")
@@ -174,7 +173,7 @@ def main() -> None:
                 if n_ok >= args.reps or attempts[c] >= max_attempts:
                     continue
                 attempts[c] += 1
-                r = run_rep(c, corpus_dir, args.payload, floor_for[c], bw_floor)
+                r = run_rep(c, corpus_dir, floor_for[c], bw_floor)
                 reps[c].append(r)
                 s = r["sentinel"]
                 print(
@@ -250,7 +249,9 @@ each via local-cluster mode; a plain `N` runs one JVM with N threads).
 
 - Job: full KG pipeline (ingest -> pilot filters -> mention alignment ->
   entity linking -> corefs -> SRL -> triple serialization), stage
-  boundaries materialized via `sinks.CheckpointStore`.
+  boundaries materialized via `sinks.CheckpointStore`, outputs written by
+  `pipeline.write_outputs` (full + pilot triple stores, six output layers
+  in one tagged write).
 - Input: deterministic synthetic transcript corpus, seed 42,
   {n_incidents} incidents = {lo['n_turns']:,} turns.
 - Confs: AQE on (coalesce respects advisory size, skew join on), Arrow on,
@@ -269,8 +270,6 @@ each via local-cluster mode; a plain `N` runs one JVM with N threads).
 |---|---|---|---|---|---|
 {level_row(levels[0], lo)}
 {level_row(levels[1], hi)}
-
-Output representation: payload={lo.get('payload')}, codec={lo.get('codec')}.
 
 **Throughput ratio ({total_cores(levels[1])}/{total_cores(levels[0])}
 cores): {ratio:.2f}x over a

@@ -2,6 +2,12 @@
 Spark event-logging on, tag every pipeline phase as a Spark job group, then
 aggregate per-phase task metrics from the event log.
 
+The run is ``pipeline.build`` with a checkpoint store followed by
+``pipeline.write_outputs``, the write sequence jobs/run_pipeline.py ships.
+Its phases are the checkpoint stages (s01-s04 and ``out_layers``, the six
+output layers in one write) and ``write_triples`` (the full and pilot
+triple stores); the result also carries the per-output row counts.
+
 Per phase it reports: wall, sum of task run time (task-seconds), sum of
 executor CPU time, GC time, python-UDF time, task count, max task wall —
 enough to split a poor per-phase speedup into (a) extra work at higher
@@ -188,21 +194,26 @@ def run(cpus: int, corpus_dir: str, out_path: str | None) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
 
-    # tag each materialized phase as a job group
-    orig_mat = CheckpointStore.materialize
+    # tag each checkpoint stage and the triple writes as job groups
     phase_wall: dict[str, float] = {}
 
-    def tagged_mat(self, df, stage, partition_by=(), compression=None):
-        sc.setJobGroup(stage, stage)
-        t0 = time.perf_counter()
-        try:
-            return orig_mat(self, df, stage, partition_by, compression)
-        finally:
-            phase_wall[stage] = phase_wall.get(stage, 0.0) + (
-                time.perf_counter() - t0)
-            sc.setJobGroup("untagged", "untagged")
+    def tagged(fn, phase_of):
+        def run_tagged(*args, **kwargs):
+            phase = phase_of(*args)
+            sc.setJobGroup(phase, phase)
+            t0 = time.perf_counter()
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                phase_wall[phase] = phase_wall.get(phase, 0.0) + (
+                    time.perf_counter() - t0)
+                sc.setJobGroup("untagged", "untagged")
+        return run_tagged
 
-    CheckpointStore.materialize = tagged_mat
+    orig_mat, orig_write = CheckpointStore.materialize, sinks.write_triples
+    CheckpointStore.materialize = tagged(
+        orig_mat, lambda self, df, stage, *_: stage)
+    sinks.write_triples = tagged(orig_write, lambda *_: "write_triples")
 
     t = CorpusTables(spark, corpus_dir)
     n_turns = t.transcripts.count()
@@ -212,27 +223,17 @@ def run(cpus: int, corpus_dir: str, out_path: str | None) -> None:
         store = CheckpointStore(spark, ckpt)
         sc.setJobGroup("untagged", "untagged")
         o = pipeline.build(t, store=store)
-        outs = {
-            "mentions": o.mentions,
-            "full_triples": o.full_triples,
-            "pilot_triples": o.pilot_triples,
-            "corefs": o.corefs,
-            "srl_links": o.srl_links,
-        }
-        sc.setJobGroup("out_layers", "out_layers")
-        tw0 = time.perf_counter()
-        sinks.write_layer_union(store, outs, "out_layers")
-        phase_wall["out_layers"] = time.perf_counter() - tw0
+        counts = pipeline.write_outputs(o, store, os.path.join(ckpt, "out"))
         wall = time.perf_counter() - t0
     finally:
-        CheckpointStore.materialize = orig_mat
+        CheckpointStore.materialize, sinks.write_triples = orig_mat, orig_write
 
     spark.stop()
     try:
         agg = aggregate(evdir, cpus, phase_wall)
         result = {
             "cpus": cpus, "n_turns": n_turns, "wall_sec": round(wall, 2),
-            "phases": agg,
+            "counts": counts, "phases": agg,
         }
         line = json.dumps(result)
         if out_path:

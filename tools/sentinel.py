@@ -1,5 +1,5 @@
 """Host-noise sentinel: the shared contamination-metering machinery used by
-every benchmark in this repo (tools/bench_scaling.py, tools/bench_payload_ab.py,
+every benchmark in this repo (tools/bench_scaling.py,
 bench.py headline loop since round 5).
 
 Why it exists (measured rounds 2-4, BENCH/BASELINE.md "Host-noise
